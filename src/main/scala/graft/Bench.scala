@@ -1,55 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // driver contract: bench runs at local[32] unless told otherwise
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Corpus-regen proofing: a TIMESTAMP(NANOS) events.parquet is
-      // unreadable without this flag (it surfaces as LongType nanos,
-      // which Tables.events normalizes). The current corpus is
-      // timestamp[us], where the flag is a documented no-op — see
-      // CorpusContractSpec.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Dataset-level caches (the k-means unit-vector persist) compile
-      // their subtree into an InMemoryRelation; without this flag the
-      // CACHED plan is planned with AQE's re-partitioning disabled
-      // (Spark 4.1 default false), so every shuffle inside it runs at
-      // the full shuffle-partition count with no coalescing.
-      // Scale-neutral: it simply extends the session's existing AQE
-      // policy to cached subtrees (the same value is right on a
-      // cluster; outputs re-verified bit-identical).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // MEASURED AND REVERTED (r12): coalescePartitions.parallelismFirst
-      // =false (size-first AQE coalescing, guide §2.2) won 20-40% on a
-      // local[4] sample but LOST ~3.5% net on the full local[32] bench
-      // (jaccard_pairs +0.9 s, training_cut +0.6 s): at this scale
-      // factor the advisory size coalesces CPU-bound stages below the
-      // core count. Default (parallelism-first) kept; see
-      // OPTIMIZATION_r12.md.
-      // default 100-entry codegen cache thrashes across 44 query plans
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // keep managed tables (ctas) out of the repo and stale-proof
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      // No libhadoop in this environment: Hadoop's local-fs permission
-      // ops fall back to fork/exec'ing `chmod` per created file/dir —
-      // stack-sampled as the dominant cost of streaming state-store
-      // commits (serialized under the provider-registry lock) and a
-      // per-file tax on every local write. Two scheme-appropriate
-      // replacements, semantics identical (see the classes' docs):
-      .config("spark.hadoop.fs.file.impl", "graft.core.FastLocalFileSystem")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(s"local[$cpus]")
     // Warm the scan path once (file listing, parquet reader JIT, first
     // codegen) so the first timed query doesn't absorb JVM boot cost.
     // Query-specific work is NOT warmed — each query below still runs

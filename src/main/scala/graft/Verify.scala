@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,30 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE applies inside barrier-cached subtrees (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Corpus-regen proofing: a TIMESTAMP(NANOS) events.parquet is
-      // unreadable without this flag (it surfaces as LongType nanos,
-      // which Tables.events normalizes). The current corpus is
-      // timestamp[us], where the flag is a documented no-op — see
-      // CorpusContractSpec.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep managed tables (ctas) out of the repo and stale-proof
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      // fork-free local-fs permission ops + NIO checkpoint manager
-      // (see Bench.scala / the classes' docs)
-      .config("spark.hadoop.fs.file.impl", "graft.core.FastLocalFileSystem")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(s"local[$cpus]")
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

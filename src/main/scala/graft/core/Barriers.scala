@@ -63,16 +63,11 @@ object Barriers {
   private val live =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.rdd.RDD[_]]()
 
-  /** Dev-only A/B override of every call's `eager` flag
-    * (GRAFT_BARRIER_EAGER=0/1); unset in driver runs. */
-  private val eagerOverride: Option[Boolean] =
-    sys.env.get("GRAFT_BARRIER_EAGER").map(_ == "1")
-
   def cached(tag: String, df: DataFrame, eager: Boolean = true): DataFrame = {
     val (rdd, out) = org.apache.spark.sql.graft.Bridge.rddBarrier(df)
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
     Option(live.put(tag, rdd)).foreach(_.unpersist(false))
-    if (eagerOverride.getOrElse(eager)) { out.count(): Unit }
+    if (eager) { out.count(): Unit }
     // MEASURED AND REJECTED (r13): re-spreading an AQE-coalesced
     // 1-partition barrier across defaultParallelism (rdd.repartition
     // before persist) regressed the dedup/semantic family 20-40% at

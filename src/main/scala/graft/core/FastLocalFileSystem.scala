@@ -29,8 +29,11 @@ class FastLocalFileSystem extends LocalFileSystem(new FastRawLocalFileSystem)
   * through `setPermission`, so one override removes every fork. */
 class FastRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {
-    val perms = new java.util.HashSet[PosixFilePermission]()
     val bits = permission.toShort.toInt
+    // setuid / setgid / sticky have no PosixFilePermission: Hadoop's
+    // shell path keeps them (rare, so the fork cost does not matter)
+    if ((bits & 0xE00) != 0) return super.setPermission(p, permission)
+    val perms = new java.util.HashSet[PosixFilePermission]()
     def add(bit: Int, perm: PosixFilePermission): Unit =
       if ((bits & bit) != 0) { perms.add(perm); () }
     add(0x100, PosixFilePermission.OWNER_READ)

@@ -1,11 +1,15 @@
 package graft.core
 
+import java.io.IOException
+import java.nio.file.{Files, InvalidPathException, Paths}
+import java.util.concurrent.TimeUnit
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Corpus table accessors (TESTDATA.md layout: `$dir/<name>.parquet`).
   * Plain parquet reads so Catalyst keeps pushdown + pruning. */
 object Tables {
-  /** Inferred-schema cache, keyed by (path, mtime). Schema inference
+  /** Inferred-schema cache, keyed by (path, mtime, length). Schema inference
     * reads the parquet footer on the DRIVER on every
     * `spark.read.parquet` call; queries reference each table several
     * times and the bench sweeps every query three times, so the same
@@ -15,11 +19,13 @@ object Tables {
     * or of the directory for directory tables — either changes when the
     * table is rewritten) invalidates the entry if a corpus is ever
     * regenerated at the same path inside one JVM (ADVICE r12: a
-    * path-only key would silently read the stale schema). Stale
-    * (path, old-mtime) entries are dropped on sight, so the map holds
-    * one entry per live path. */
+    * path-only key would silently read the stale schema). The mtime is
+    * read at the filesystem's full (nanosecond) resolution and paired
+    * with the length: a rewrite inside one millisecond, or one whose
+    * mtime was reset, still changes the key. Stale entries are
+    * replaced on sight, so the map holds one entry per live path. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, org.apache.spark.sql.types.StructType)]()
+    String, ((Long, Long), org.apache.spark.sql.types.StructType)]()
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -30,12 +36,16 @@ object Tables {
     * schemaCache above). Also used by the streaming file source, which
     * must pass an explicit schema anyway. */
   def schemaOf(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
-    val mtime = new java.io.File(path).lastModified()
+    val key =
+      try {
+        val p = Paths.get(path)
+        (Files.getLastModifiedTime(p).to(TimeUnit.NANOSECONDS), Files.size(p))
+      } catch { case _: IOException | _: InvalidPathException => (0L, -1L) }
     val hit = schemaCache.get(path)
-    if (hit != null && hit._1 == mtime) hit._2
+    if (hit != null && hit._1 == key) hit._2
     else {
       val schema = spark.read.parquet(path).schema
-      schemaCache.put(path, (mtime, schema))
+      schemaCache.put(path, (key, schema))
       schema
     }
   }

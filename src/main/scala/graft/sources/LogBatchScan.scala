@@ -28,8 +28,9 @@ import graft.core.SnapshotLog.{FileEntry, Pred}
   *    manifest pruning is file-level — skipping drops files, never
   *    rows, so pruned and unpruned reads agree by construction.
   *  - `SupportsPushDownRequiredColumns`: the projection reaches the
-  *    parquet page level per file (`ProjectingGroupReadSupport`) — a
-  *    2-column aggregate over a 50-column table decodes 2 columns.
+  *    parquet page level per file (the vectorized reader requests only
+  *    the projected columns) — a 2-column aggregate over a 50-column
+  *    table decodes 2 columns.
   *  - `SupportsReportStatistics`: row/byte totals of the PRUNED file
   *    set straight from the manifest, so the optimizer sees real
   *    sizes (a filtered graft-log dimension auto-broadcasts without a
@@ -363,11 +364,9 @@ final class LogScan(table: String, fullSchema: StructType,
     * deletion-vectored entries (remapped live-position vectors),
     * metadata/CDF columns (per-file constant vectors; `_graft_pos`
     * rides a position vector — so row-level DML target scans and batch
-    * CDF decode columnar too), in any combination. Only the STREAMING
-    * micro-batch path keeps the row reader. `vectorizedRead=false`
-    * opts a scan out (the A/B seam ScanProbe measures). */
+    * CDF decode columnar too), in any combination. STREAMING
+    * micro-batches use the same reader. */
   override def createReaderFactory(): PartitionReaderFactory = {
-    val columnar = options.getBoolean("vectorizedRead", true)
     // WITHIN-FILE skipping: the pushed + runtime filters also travel to
     // the vectorized reader, which turns them into parquet
     // FilterPredicates against each file's footer — row-group stats and
@@ -378,10 +377,8 @@ final class LogScan(table: String, fullSchema: StructType,
     // cannot translate is simply not pushed (it stays a residual).
     // The reader opts out per file where ordinals must not shift:
     // deletion-vectored entries, and any scan asking for `_graft_pos`.
-    val parquetPushed =
-      if (!columnar) Seq.empty
-      else (srcFilters ++ runtimeSrcFilters)
-        .flatMap(LogFilters.renamePhys(_, state.physOf))
+    val parquetPushed = (srcFilters ++ runtimeSrcFilters)
+      .flatMap(LogFilters.renamePhys(_, state.physOf))
     // bloom probe placement: when the driver already applied the tier
     // (small candidate set) the executors skip the re-probe; past the
     // driver cap each TASK tests its own file's sidecar before opening
@@ -390,8 +387,7 @@ final class LogScan(table: String, fullSchema: StructType,
     val bloomPred =
       if (driverBloomed) None
       else physPred().filter(graft.core.BloomIndex.bloomable)
-    new LogPartitionReaderFactory(requiredSchema, columnar, parquetPushed,
-      bloomPred = bloomPred)
+    new LogPartitionReaderFactory(requiredSchema, parquetPushed, bloomPred)
   }
 
   /** Manifest-exact statistics of the PRUNED scan: live rows (dv rows

@@ -1,30 +1,33 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** VECTORIZED (columnar) reader for one immutable graft-log data file —
-  * the batch DSv2 path's default read shape, replacing the row-based
-  * parquet `Group` decode wherever the partition qualifies (no deletion
-  * vectors, no metadata/CDF columns). This is the Iceberg/Delta batch
-  * shape: Spark's own `VectorizedParquetRecordReader` decodes column
-  * pages straight into `ColumnarBatch` vectors (dictionary-aware,
-  * null-bitmap bulk copies, no per-row boxing) and hands whole batches
-  * to whole-stage codegen through `ColumnarToRow`, which iterates
-  * vectors in a tight loop instead of materializing a
-  * `GenericInternalRow` per row. On a scan-bound query this is the
-  * difference between decoding 4096 values per virtual call and one.
+  * the source's only read shape, for batch scans and streaming
+  * micro-batches alike. This is the Iceberg/Delta batch shape: Spark's
+  * own `VectorizedParquetRecordReader` decodes column pages straight
+  * into `ColumnarBatch` vectors (dictionary-aware, null-bitmap bulk
+  * copies, no per-row boxing) and hands whole batches to whole-stage
+  * codegen through `ColumnarToRow`, which iterates vectors in a tight
+  * loop instead of materializing a `GenericInternalRow` per row. On a
+  * scan-bound query this is the difference between decoding 4096
+  * values per virtual call and one.
   *
   * The reader initializes through the standard MR path
   * (`ParquetReadSupport` resolves the requested Spark schema against
   * the file footer), so per-file schema EVOLUTION keeps working: a
   * column missing from an older file surfaces as an all-null vector —
-  * the same union semantics as the row reader. Hive partition-column
-  * constants ride as the reader's appended constant vectors
+  * the same union semantics as Spark's parquet read. Hive partition-
+  * column constants ride as the reader's appended constant vectors
   * (`initBatch`), then the output batch REORDERS vectors to the
   * required schema's column order (Spark appends partition columns
   * last; the scan's declared schema may interleave them).
@@ -43,10 +46,6 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   * ride the reader's appended constant vectors; `_graft_pos` rides a
   * [[PositionColumnVector]] of file ordinals (remap-composable) — so
   * the row-level DML target scan and batch CDF keep vectorized decode.
-  *
-  * What stays on the row reader: the STREAMING micro-batch path —
-  * per-version file batches are small and bounded, and the stream's
-  * value is latency, not decode bandwidth.
   */
 final class LogColumnarReader(part: LogInputPartition, schema: StructType,
                               pushed: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
@@ -92,14 +91,13 @@ final class LogColumnarReader(part: LogInputPartition, schema: StructType,
     part.partValues.flatMap { case (pc, v) => part.logicalName(pc).map(l => (l, v)) }
       .filter(pv => schema.fieldNames.contains(pv._1))
 
-  /** METADATA columns served as per-file constant vectors — the same
-    * per-row values the row reader synthesizes: `_commit_version` and
-    * `_graft_rel` are file constants by definition; `_change_type` is
-    * a constant only when the commit supplied the tag (an append's
-    * "insert") — a cdc change-data file CARRIES the column and reads
-    * it as data (and a plain file with no tag clips to an all-null
-    * vector, the row reader's null). `_graft_pos` is the one genuinely
-    * per-row metadatum; it rides [[PositionColumnVector]]. */
+  /** METADATA columns served as per-file constant vectors:
+    * `_commit_version` and `_graft_rel` are file constants by
+    * definition; `_change_type` is a constant only when the commit
+    * supplied the tag (an append's "insert") — a cdc change-data file
+    * CARRIES the column and reads it as data (and a plain file with no
+    * tag clips to an all-null vector). `_graft_pos` is the one
+    * genuinely per-row metadatum; it rides [[PositionColumnVector]]. */
   private val metaConsts: Seq[(String, Any)] = schema.fields.toSeq.flatMap { f =>
     f.name match {
       case LogStreamSource.CommitVersionCol => Some(f.name -> part.version)
@@ -121,7 +119,7 @@ final class LogColumnarReader(part: LogInputPartition, schema: StructType,
   private val partSchema = StructType(
     partConsts.map { case (c, _) => schema(c) } ++ metaConsts.map { case (c, _) => schema(c) })
   private val partRow = InternalRow.fromSeq(partConsts.map { case (c, v) =>
-    v.map(raw => LogPartitionReader.partValue(raw, schema(c).dataType)).orNull
+    v.map(raw => LogColumnarReader.partValue(raw, schema(c).dataType)).orNull
   } ++ metaConsts.map(_._2))
 
   private val posVec: PositionColumnVector = if (hasPos) new PositionColumnVector else null
@@ -189,7 +187,7 @@ final class LogColumnarReader(part: LogInputPartition, schema: StructType,
     * skips rows. */
   private val dead: java.util.HashSet[java.lang.Long] =
     if (part.dvDirs.isEmpty) null
-    else LogPartitionReader.deadPositions(part.dvDirs, part.relPath)
+    else LogColumnarReader.deadPositions(part.dvDirs, part.relPath)
 
   /** Live-position mapping for the CURRENT batch (capacity matches the
     * reader's), shared by reference with the remapped vectors. */
@@ -229,6 +227,102 @@ final class LogColumnarReader(part: LogInputPartition, schema: StructType,
   override def get(): ColumnarBatch = cur
 
   override def close(): Unit = reader.close()
+}
+
+/** Per-file helpers of [[LogColumnarReader]]: deletion-vector loading
+  * and hive partition-value decoding. */
+object LogColumnarReader {
+  /** Whether a deletion-vector SHARD can hold positions for `relPath`,
+    * from its footer's `path`-column min/max alone (no row reads).
+    * Conservative: absent or unusable statistics keep the shard. */
+  private[sources] def shardMayContain(f: java.io.File, relPath: String): Boolean = {
+    val target = relPath.getBytes("UTF-8")
+    def lexCompare(a: Array[Byte], b: Array[Byte]): Int = {
+      var i = 0
+      val n = math.min(a.length, b.length)
+      while (i < n) {
+        val c = (a(i) & 0xff) - (b(i) & 0xff)
+        if (c != 0) return c
+        i += 1
+      }
+      a.length - b.length
+    }
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getPath), new Configuration()))
+    try {
+      val blocks = r.getFooter.getBlocks
+      var bi = 0
+      while (bi < blocks.size()) {
+        val cols = blocks.get(bi).getColumns
+        var ci = 0
+        var overlaps = true // no path column / no stats: keep the shard
+        while (ci < cols.size()) {
+          val c = cols.get(ci)
+          if (c.getPath.toDotString == "path") {
+            val st = c.getStatistics
+            overlaps = st == null || st.isEmpty || !st.hasNonNullValue ||
+              (lexCompare(st.getMinBytes, target) <= 0 &&
+                lexCompare(st.getMaxBytes, target) >= 0)
+            ci = cols.size()
+          } else ci += 1
+        }
+        if (overlaps) return true
+        bi += 1
+      }
+      false
+    } finally r.close()
+  }
+
+  /** One data file's dead in-file positions, collected from its
+    * deletion-vector sidecar directories. A SHARDED sidecar (large
+    * purge: up to 10k shards, laid out path-contiguous by
+    * repartitionByRange) must not be read in full by every data-file
+    * reader — each shard's footer min/max of the `path` column gates
+    * the open (O(shards) footer reads, O(relevant shards) row reads
+    * instead of O(all)). */
+  private[sources] def deadPositions(dvDirs: Seq[String], relPath: String)
+      : java.util.HashSet[java.lang.Long] = {
+    val s = new java.util.HashSet[java.lang.Long]()
+    dvDirs.foreach { dir =>
+      val fs = Option(new java.io.File(dir).listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      fs.foreach { f =>
+        if (fs.length == 1 || shardMayContain(f, relPath)) {
+          val r = ParquetReader.builder[Group](new GroupReadSupport(),
+            new org.apache.hadoop.fs.Path(f.getPath))
+            .withConf(new Configuration()).build()
+          try {
+            var g = r.read()
+            while (g != null) {
+              if (g.getString("path", 0) == relPath)
+                s.add(g.getLong("pos", 0))
+              g = r.read()
+            }
+          } finally r.close()
+        }
+      }
+    }
+    s
+  }
+
+  /** Hive partition-value string -> Catalyst value, by the TABLE
+    * schema's type for the column (the same types Spark's own
+    * partition inference restored when the log read used basePath). */
+  private[sources] def partValue(raw: String, dt: DataType): Any = dt match {
+    case StringType => UTF8String.fromString(raw)
+    case IntegerType => raw.toInt
+    case LongType => raw.toLong
+    case ShortType => raw.toShort
+    case ByteType => raw.toByte
+    case DoubleType => raw.toDouble
+    case FloatType => raw.toFloat
+    case BooleanType => raw.toBoolean
+    case DateType => java.time.LocalDate.parse(raw).toEpochDay.toInt
+    case d: DecimalType => Decimal(new java.math.BigDecimal(raw), d.precision, d.scale)
+    case other => sys.error(s"graft-log: unsupported partition column type $other")
+  }
 }
 
 /** A ColumnVector view that hides DELETED rows: every accessor routes
@@ -279,7 +373,7 @@ private[sources] final class RemappedColumnVector(u: ColumnVector, mapping: Arra
   * file's sequential ordinals — which is also why a scan asking for
   * positions disables parquet row-group/page skipping, and why a
   * dv-remapped batch wraps this vector too (the remap then yields the
-  * live row's ORIGINAL ordinal, exactly the row reader's counter). */
+  * live row's ORIGINAL ordinal). */
 private[sources] final class PositionColumnVector
     extends ColumnVector(org.apache.spark.sql.types.LongType) {
   var start: Long = 0L

@@ -202,10 +202,10 @@ object LogDeltaWriter {
 }
 
 /** Task-side parquet writer for FLAT InternalRows via the public
-  * parquet-hadoop example API (the write twin of the source's
-  * `LogPartitionReader`): types annotate so both Spark's vectorized
-  * reader (with an explicit schema) and the Group reader round-trip
-  * exactly. */
+  * parquet-hadoop example API: types annotate so both Spark's
+  * vectorized reader (with an explicit schema) and the Group reader of
+  * deletion-vector sidecars (`LogColumnarReader.deadPositions`)
+  * round-trip exactly. */
 final class InternalRowParquetWriter(path: String, schema: StructType) {
   private val msgType: MessageType = {
     val b = Types.buildMessage()

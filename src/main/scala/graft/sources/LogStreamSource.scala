@@ -1,11 +1,6 @@
 package graft.sources
 
 import java.util.{Map => JMap, Set => JSet}
-import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -17,7 +12,6 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
-import org.apache.spark.unsafe.types.UTF8String
 import graft.core.SnapshotLog
 
 /** Structured Streaming SOURCE over the snapshot log's change feed —
@@ -84,11 +78,10 @@ import graft.core.SnapshotLog
   *    rewrites.
   *
   * Reader: each input partition is one immutable parquet data file,
-  * read via parquet-hadoop's public example API with a per-file
-  * projection (`ProjectingGroupReadSupport`) and converted to
-  * Catalyst rows by schema dispatch. Flat schemas only (primitive
-  * columns — long/int/double/float/bool/string/binary/date/
-  * timestamp/decimal); nested columns fail fast at scan planning.
+  * decoded by the same vectorized [[LogColumnarReader]] every batch
+  * scan uses — one read path for batch and stream. Flat schemas only
+  * (primitive columns — long/int/double/float/bool/string/binary/
+  * date/timestamp/decimal); nested columns fail fast at scan planning.
   * Hive `col=value` staged layouts come back as partition-column
   * constants parsed from entry paths; deletion-vectored entries read
   * THROUGH their vectors (dead positions skip in the reader). A file
@@ -621,13 +614,12 @@ final case class LogGroupedPartition(files: Seq[LogInputPartition],
   override def partitionKey(): InternalRow = new GenericInternalRow(keyVals.toArray)
 }
 
-/** `columnar=true` switches the BATCH scan to vectorized
-  * `ColumnarBatch` reads (see [[LogColumnarReader]]); the decision is
-  * made ONCE per scan (Spark requires all partitions of a scan to
-  * agree), so the flag arrives from `LogScan.createReaderFactory`.
-  * The streaming micro-batch path always passes false. */
+/** Every graft-log read — batch scans, storage-partitioned key groups
+  * and streaming micro-batches — is VECTORIZED (see
+  * [[LogColumnarReader]]): `createReader` exists only to satisfy the
+  * interface and throws. `pushed` and `bloomPred` arrive from
+  * `LogScan.createReaderFactory`; the streaming path passes neither. */
 final class LogPartitionReaderFactory(schema: StructType,
-                                      columnar: Boolean = false,
                                       pushed: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty,
                                       bloomPred: Option[graft.core.SnapshotLog.Pred] = None)
     extends PartitionReaderFactory {
@@ -647,21 +639,17 @@ final class LogPartitionReaderFactory(schema: StructType,
     }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case g: LogGroupedPartition =>
-        new LogChainedReader(g.files.filterNot(bloomSkips), schema)
-      case p: LogInputPartition if bloomSkips(p) => LogEmptyReader
-      case p: LogInputPartition => new LogPartitionReader(p, schema)
-    }
+    throw new UnsupportedOperationException(
+      s"graft-log: reads are columnar only, no row read for $partition")
 
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     partition match {
-      case g: LogGroupedPartition if columnar =>
+      case g: LogGroupedPartition =>
         new LogChainedColumnarReader(g.files.filterNot(bloomSkips), schema, pushed)
-      case p: LogInputPartition if columnar && bloomSkips(p) => LogEmptyColumnarReader
-      case p: LogInputPartition if columnar => new LogColumnarReader(p, schema, pushed)
+      case p: LogInputPartition if bloomSkips(p) => LogEmptyColumnarReader
+      case p: LogInputPartition => new LogColumnarReader(p, schema, pushed)
       case p => throw new UnsupportedOperationException(
         s"graft-log: no columnar read for $p")
     }
@@ -669,12 +657,6 @@ final class LogPartitionReaderFactory(schema: StructType,
 
 /** A bloom-skipped file's reader: proven to hold no matching row, so
   * it yields nothing without touching the parquet. */
-private[sources] object LogEmptyReader extends PartitionReader[InternalRow] {
-  override def next(): Boolean = false
-  override def get(): InternalRow =
-    throw new IllegalStateException("empty reader has no rows")
-  override def close(): Unit = ()
-}
 private[sources] object LogEmptyColumnarReader extends PartitionReader[ColumnarBatch] {
   override def next(): Boolean = false
   override def get(): ColumnarBatch =
@@ -706,295 +688,13 @@ final class LogChainedColumnarReader(parts: Seq[LogInputPartition],
   override def close(): Unit = if (cur != null) cur.close()
 }
 
-/** Sequential reader over a key group's files (one task reads one
-  * hive partition's file set — parallelism is across partition values,
-  * the co-partitioned-join contract). */
-final class LogChainedReader(parts: Seq[LogInputPartition], schema: StructType)
-    extends PartitionReader[InternalRow] {
-  private val it = parts.iterator
-  private var cur: LogPartitionReader = _
-  override def next(): Boolean = {
-    while (true) {
-      if (cur == null) {
-        if (!it.hasNext) return false
-        cur = new LogPartitionReader(it.next(), schema)
-      }
-      if (cur.next()) return true
-      cur.close(); cur = null
-    }
-    false
-  }
-  override def get(): InternalRow = cur.get()
-  override def close(): Unit = if (cur != null) cur.close()
-}
-
-/** GroupReadSupport with a PER-FILE projection: request only the
-  * `wanted` columns that exist in this file's schema — column pruning
-  * reaches the parquet page level (unprojected columns are never
-  * decoded), and schema evolution is tolerated per file (an older
-  * file simply projects fewer columns; the reader surfaces null for
-  * the rest). An empty intersection keeps the file's first column so
-  * row iteration still advances (a bare COUNT(*) scan). */
-private[sources] final class ProjectingGroupReadSupport(wanted: Array[String])
-    extends GroupReadSupport {
-  override def init(conf: Configuration, kv: JMap[String, String],
-                    fileSchema: org.apache.parquet.schema.MessageType)
-      : org.apache.parquet.hadoop.api.ReadSupport.ReadContext = {
-    val kept = wanted.filter(fileSchema.containsField)
-      .map(n => (fileSchema: org.apache.parquet.schema.GroupType).getType(n))
-    val fields: java.util.List[org.apache.parquet.schema.Type] =
-      if (kept.isEmpty) java.util.Collections.singletonList(fileSchema.getFields.get(0))
-      else java.util.Arrays.asList(kept: _*)
-    new org.apache.parquet.hadoop.api.ReadSupport.ReadContext(
-      new org.apache.parquet.schema.MessageType(fileSchema.getName, fields))
-  }
-}
-
-/** Row-by-row parquet reader for ONE immutable data file, via the
-  * public parquet-hadoop example API. The conversion dispatches on
-  * the SPARK type and the file's parquet primitive/logical type, so
-  * INT64-micros and INT96 timestamps, all three decimal encodings,
-  * and dictionary/plain strings all land correctly in Catalyst
-  * representation (micros-since-epoch longs, UTF8String, Decimal).
-  * Hive partition columns come back as constants parsed from the
-  * path; deletion-vectored entries skip their dead positions. */
-final class LogPartitionReader(part: LogInputPartition, schema: StructType)
-    extends PartitionReader[InternalRow] {
-
-  LogSourceAudit.filesOpened.incrementAndGet()
-
-  private val changeTypeUtf8: UTF8String =
-    part.changeType.map(UTF8String.fromString).orNull
-  private val relPathUtf8: UTF8String = UTF8String.fromString(part.relPath)
-
-  /** Partition constants pre-converted to Catalyst representation,
-    * keyed by LOGICAL name (directory names are physical; columns
-    * pruned out of the required schema are dropped). */
-  private val partConsts: Map[String, Any] = part.partValues
-    .flatMap { case (pc, v) => part.logicalName(pc).map(l => (l, v)) }
-    .filter(pv => schema.fieldNames.contains(pv._1)).map { case (c, v) =>
-      c -> v.map(raw => LogPartitionReader.partValue(raw, schema(c).dataType)).orNull
-    }.toMap
-
-  private val reader: ParquetReader[Group] = {
-    // requested under PHYSICAL names (what the files carry)
-    val wanted = schema.fields.map(_.name).filterNot(partConsts.contains)
-      .map(part.physName)
-    ParquetReader.builder[Group](new ProjectingGroupReadSupport(wanted),
-      new org.apache.hadoop.fs.Path(part.absPath))
-      .withConf(new Configuration()).build()
-  }
-
-  /** Dead in-file positions from the entry's sidecars (dv rows are
-    * (path, pos); positions are `_metadata.row_index` ordinals, which
-    * this reader's sequential row counter reproduces exactly). */
-  private val dead: java.util.HashSet[java.lang.Long] =
-    if (part.dvDirs.isEmpty) null
-    else LogPartitionReader.deadPositions(part.dvDirs, part.relPath)
-
-  private var current: Group = _
-  private var rowPos: Long = -1L
-
-  override def next(): Boolean = {
-    current = reader.read()
-    rowPos += 1
-    if (dead != null) {
-      while (current != null && dead.contains(rowPos)) {
-        current = reader.read()
-        rowPos += 1
-      }
-    }
-    current != null
-  }
-
-  override def get(): InternalRow = {
-    val g = current
-    val gt = g.getType
-    val vals = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      val f = schema(i)
-      vals(i) =
-        // CDF metadata columns: constants from the commit record when
-        // the file itself does not carry them (cdc files DO carry
-        // _change_type — their recorded value wins)
-        if (f.name == LogStreamSource.CommitVersionCol && !gt.containsField(f.name))
-          part.version
-        else if (f.name == LogStreamSource.ChangeTypeCol && !gt.containsField(f.name))
-          changeTypeUtf8
-        // row-identity metadata: the same (path, pos) coordinates the
-        // deletion-vector sidecars address rows by
-        else if (f.name == LogStreamSource.RelPathCol && !gt.containsField(f.name))
-          relPathUtf8
-        else if (f.name == LogStreamSource.RowPosCol && !gt.containsField(f.name))
-          rowPos
-        else if (partConsts.contains(f.name)) partConsts(f.name)
-        else {
-          val phys = part.physName(f.name)
-          if (!gt.containsField(phys)) null // schema evolution: older file
-          else {
-            val fi = gt.getFieldIndex(phys)
-            if (g.getFieldRepetitionCount(fi) == 0) null // null cell
-            else convert(g, gt, fi, f.dataType)
-          }
-        }
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  private def convert(g: Group, gt: GroupType, fi: Int, dt: DataType): Any = {
-    val pt = gt.getType(fi).asPrimitiveType()
-    dt match {
-      case LongType => g.getLong(fi, 0)
-      case IntegerType => g.getInteger(fi, 0)
-      case ShortType => g.getInteger(fi, 0).toShort
-      case ByteType => g.getInteger(fi, 0).toByte
-      case DoubleType => g.getDouble(fi, 0)
-      case FloatType => g.getFloat(fi, 0)
-      case BooleanType => g.getBoolean(fi, 0)
-      case StringType => UTF8String.fromBytes(g.getBinary(fi, 0).getBytes)
-      case BinaryType => g.getBinary(fi, 0).getBytes
-      case DateType => g.getInteger(fi, 0) // days since epoch, both sides
-      case TimestampType | TimestampNTZType =>
-        pt.getPrimitiveTypeName match {
-          case PrimitiveType.PrimitiveTypeName.INT96 =>
-            // legacy 12-byte julian-day + nanos-of-day encoding
-            val b = g.getInt96(fi, 0).getBytes
-            val buf = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            val nanosOfDay = buf.getLong
-            val julianDay = buf.getInt
-            (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-          case _ =>
-            val raw = g.getLong(fi, 0)
-            pt.getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit match {
-                  case LogicalTypeAnnotation.TimeUnit.MILLIS => raw * 1000L
-                  case LogicalTypeAnnotation.TimeUnit.NANOS => raw / 1000L
-                  case _ => raw // MICROS: Catalyst's native representation
-                }
-              case _ => raw
-            }
-        }
-      case d: DecimalType =>
-        pt.getPrimitiveTypeName match {
-          case PrimitiveType.PrimitiveTypeName.INT32 =>
-            Decimal(g.getInteger(fi, 0).toLong, d.precision, d.scale)
-          case PrimitiveType.PrimitiveTypeName.INT64 =>
-            Decimal(g.getLong(fi, 0), d.precision, d.scale)
-          case _ => // FIXED_LEN_BYTE_ARRAY / BINARY: big-endian unscaled
-            val unscaled = new java.math.BigInteger(g.getBinary(fi, 0).getBytes)
-            Decimal(new java.math.BigDecimal(unscaled, d.scale), d.precision, d.scale)
-        }
-      case other => sys.error(s"graft-log stream source: unsupported type $other")
-    }
-  }
-
-  override def close(): Unit = reader.close()
-}
-
-object LogPartitionReader {
-  /** Whether a deletion-vector SHARD can hold positions for `relPath`,
-    * from its footer's `path`-column min/max alone (no row reads).
-    * Conservative: absent or unusable statistics keep the shard. */
-  private[sources] def shardMayContain(f: java.io.File, relPath: String): Boolean = {
-    val target = relPath.getBytes("UTF-8")
-    def lexCompare(a: Array[Byte], b: Array[Byte]): Int = {
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val c = (a(i) & 0xff) - (b(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      a.length - b.length
-    }
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.getPath), new Configuration()))
-    try {
-      val blocks = r.getFooter.getBlocks
-      var bi = 0
-      while (bi < blocks.size()) {
-        val cols = blocks.get(bi).getColumns
-        var ci = 0
-        var overlaps = true // no path column / no stats: keep the shard
-        while (ci < cols.size()) {
-          val c = cols.get(ci)
-          if (c.getPath.toDotString == "path") {
-            val st = c.getStatistics
-            overlaps = st == null || st.isEmpty || !st.hasNonNullValue ||
-              (lexCompare(st.getMinBytes, target) <= 0 &&
-                lexCompare(st.getMaxBytes, target) >= 0)
-            ci = cols.size()
-          } else ci += 1
-        }
-        if (overlaps) return true
-        bi += 1
-      }
-      false
-    } finally r.close()
-  }
-
-  /** One data file's dead in-file positions, collected from its
-    * deletion-vector sidecar directories. A SHARDED sidecar (large
-    * purge: up to 10k shards, laid out path-contiguous by
-    * repartitionByRange) must not be read in full by every data-file
-    * reader — each shard's footer min/max of the `path` column gates
-    * the open (O(shards) footer reads, O(relevant shards) row reads
-    * instead of O(all)). Shared by the row and the columnar reader. */
-  private[sources] def deadPositions(dvDirs: Seq[String], relPath: String)
-      : java.util.HashSet[java.lang.Long] = {
-    val s = new java.util.HashSet[java.lang.Long]()
-    dvDirs.foreach { dir =>
-      val fs = Option(new java.io.File(dir).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      fs.foreach { f =>
-        if (fs.length == 1 || shardMayContain(f, relPath)) {
-          val r = ParquetReader.builder[Group](new GroupReadSupport(),
-            new org.apache.hadoop.fs.Path(f.getPath))
-            .withConf(new Configuration()).build()
-          try {
-            var g = r.read()
-            while (g != null) {
-              if (g.getString("path", 0) == relPath)
-                s.add(g.getLong("pos", 0))
-              g = r.read()
-            }
-          } finally r.close()
-        }
-      }
-    }
-    s
-  }
-
-  /** Hive partition-value string -> Catalyst value, by the TABLE
-    * schema's type for the column (the same types Spark's own
-    * partition inference restored when the log read used basePath). */
-  private[sources] def partValue(raw: String, dt: DataType): Any = dt match {
-    case StringType => UTF8String.fromString(raw)
-    case IntegerType => raw.toInt
-    case LongType => raw.toLong
-    case ShortType => raw.toShort
-    case ByteType => raw.toByte
-    case DoubleType => raw.toDouble
-    case FloatType => raw.toFloat
-    case BooleanType => raw.toBoolean
-    case DateType => java.time.LocalDate.parse(raw).toEpochDay.toInt
-    case d: DecimalType => Decimal(new java.math.BigDecimal(raw), d.precision, d.scale)
-    case other => sys.error(s"graft-log: unsupported partition column type $other")
-  }
-}
-
 /** Plan-audit seam: every per-file reader the source opens increments
   * this — a spec (or an operator) can assert that a pushed-down
   * predicate opened EXACTLY the manifest-pruned file set. */
 object LogSourceAudit {
   val filesOpened = new java.util.concurrent.atomic.AtomicLong(0L)
-  /** Of those, files opened through the VECTORIZED batch reader —
-    * specs pin that the default batch path is columnar. */
+  /** Of those, files opened through the VECTORIZED reader — specs pin
+    * that batch and streaming reads are columnar. */
   val columnarOpened = new java.util.concurrent.atomic.AtomicLong(0L)
   /** Rows DECODED by the vectorized reader (post row-group / page
     * skipping, pre dv remapping) — specs pin that a selective filter

@@ -605,8 +605,7 @@ object EventStreams {
     * have no false negatives, so the gate's output is bit-identical
     * to the plain anti-join and the same oracle checks it. */
   def dedupIngest(spark: SparkSession, dir: String,
-      maxVersionsPerTrigger: Option[Int] = Some(1),
-      onBatchMillis: (Long, Long) => Unit = (_, _) => ()): DataFrame = {
+      maxVersionsPerTrigger: Option[Int] = Some(1)): DataFrame = {
     import graft.core.SnapshotLog
     import graft.functions.DetHash
     val src = dedupIngestSourceTable(spark, dir)
@@ -640,7 +639,6 @@ object EventStreams {
     val q = stream.load(src).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
-        val t0 = System.nanoTime()
         val bf = ensureBloom()
         if (bloomDirty || bloomBc == null) {
           if (bloomBc != null) bloomBc.unpersist(false)
@@ -692,7 +690,6 @@ object EventStreams {
             missRows.foreach(_.getSeq[Long](1).foreach(bf.putLong))
             bloomDirty = true
           }
-          onBatchMillis(batchId, (System.nanoTime() - t0) / 1000000L)
         } finally { probed.unpersist(); () }
         ()
       }

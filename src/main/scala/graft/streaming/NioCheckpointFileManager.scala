@@ -28,10 +28,12 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * (~330 ms per near-empty store commit). NIO file ops are plain
   * syscalls: no fork, no checksum shadow files, no FileContext layer.
   *
-  * Rename-based atomicity is preserved: createAtomic writes a
-  * same-directory temp file and ATOMIC_MOVEs it into place on close —
-  * the exact contract the default local-fs manager implements via
-  * FileContext.rename. `open` raises java.io.FileNotFoundException on
+  * Publish atomicity is preserved: createAtomic writes a
+  * same-directory temp file and publishes it on close — the contract
+  * the default local-fs manager implements via FileContext.rename.
+  * Without overwrite the publish is a hard link, which fails if the
+  * target exists, so exactly one of racing writers wins; with
+  * overwrite it is an ATOMIC_MOVE over the target. `open` raises java.io.FileNotFoundException on
   * missing files (HDFSBackedStateStoreProvider probes snapshots by
   * catching exactly that), and `list` on a missing directory likewise.
   *
@@ -82,16 +84,19 @@ class NioCheckpointFileManager(root: Path, conf: Configuration)
         if (!terminated) {
           terminated = true
           super.close() // flushes and closes the buffered stream
-          if (!overwriteIfPossible && Files.exists(dst)) {
-            Files.deleteIfExists(tmp)
-            throw new FileAlreadyExistsException(
-              s"Failed to rename temp file $tmp to $dst as destination already exists")
-          }
-          try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-          catch { case e: NioExists =>
-            Files.deleteIfExists(tmp)
-            throw new FileAlreadyExistsException(e.getMessage)
+          if (overwriteIfPossible)
+            Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
+              StandardCopyOption.REPLACE_EXISTING)
+          else {
+            // link(2) publishes atomically AND fails if dst exists.
+            // rename(2) replaces an existing target (ATOMIC_MOVE does so
+            // even without REPLACE_EXISTING), so a zombie writer could
+            // overwrite a file committed after any exists-check.
+            try Files.createLink(dst, tmp)
+            catch { case _: NioExists =>
+              throw new FileAlreadyExistsException(
+                s"Failed to rename temp file $tmp to $dst as destination already exists")
+            } finally Files.deleteIfExists(tmp)
           }
           ()
         }

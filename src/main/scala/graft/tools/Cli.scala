@@ -240,26 +240,7 @@ object Cli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      // shuffle width follows the master's core count unless pinned —
-      // a local[32] pipeline run must not squeeze through 4 partitions
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          sys.env.get("SPARK_GRAFT_MASTER")
-            .flatMap("""local\[(\d+)\]""".r.findFirstMatchIn)
-            .map(_.group(1)).getOrElse("4")))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE applies inside barrier-cached subtrees (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // fork-free local-fs permission ops + NIO checkpoint manager
-      // (see Bench.scala / the classes' docs)
-      .config("spark.hadoop.fs.file.impl", "graft.core.FastLocalFileSystem")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
     // fail loudly AND promptly: exit codes for CI, System.exit so a
     // leaked non-daemon thread can't turn a finished copy into a hang
     // (same discipline as Verify/Bench)

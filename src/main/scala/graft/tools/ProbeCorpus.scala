@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Builds the SURVEY §6b dirty probe corpus: documents / embeddings /
@@ -13,14 +12,7 @@ object ProbeCorpus {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, factorS) = args.take(3)
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("local[4]")
     val shift = 10000000L
 
     def replicate(name: String, keyCols: Seq[String]): Unit = {

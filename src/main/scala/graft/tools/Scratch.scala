@@ -1,40 +1,13 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc timing harness used during development (not part of the
   * driver contract). Args: <sfDir> <queryName>... */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SCRATCH_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SCRATCH_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SCRATCH_AQE", "true"))
-      // match Bench/Verify: AQE applies inside barrier-cached subtrees
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SCRATCH_PARFIRST", "true"))
-      .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("SCRATCH_ROCKSDB").contains("1"))
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      .config("spark.hadoop.fs.file.impl",
-        if (sys.env.get("SCRATCH_RAWFS").contains("1"))
-          "org.apache.hadoop.fs.RawLocalFileSystem"
-        else "graft.core.FastLocalFileSystem")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SCRATCH_CKPT_FM", "graft.streaming.NioCheckpointFileManager"))
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SCRATCH_CONF="k=v;k2=v2": ad-hoc session conf overrides for A/Bs
+    val spark = graft.GraftSession.create(s"local[$cpus]")
+    // SCRATCH_CONF="k=v;k2=v2": runtime SQL conf overrides for A/Bs
+    // (e.g. spark.sql.shuffle.partitions=32, spark.sql.adaptive.enabled=false)
     sys.env.get("SCRATCH_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)

@@ -142,8 +142,9 @@ object Bridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.catalogManager.reset()
 
   /** Runtime planner-strategy registration for sessions built without
-    * `.withExtensions(new GraftExtensions)` (Verify/Bench build plain
-    * sessions): `experimental.extraStrategies` is the public hook. */
+    * `.withExtensions(new GraftExtensions)` (a caller's own session;
+    * `graft.GraftSession` always registers them):
+    * `experimental.extraStrategies` is the public hook. */
   def ensureStrategy(spark: SparkSession,
                      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental

@@ -1,0 +1,70 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards the single session factory and the deleted knobs: every
+  * `SparkSession` under `src/` comes from [[GraftSession]], no removed
+  * experiment knob or row-reader name comes back, and the factory's
+  * session carries the engine settings the mains rely on. This file is
+  * excluded from its own source scan (it names what it forbids). */
+class SessionSurfaceSpec extends AnyFunSuite with SparkFixture {
+
+  private lazy val srcRoot: Path = {
+    val start = Paths.get(sys.props("user.dir")).toAbsolutePath
+    Iterator.iterate(start)(_.getParent).takeWhile(_ != null)
+      .find(d => Files.isRegularFile(d.resolve("build.sbt")))
+      .map(_.resolve("src"))
+      .getOrElse(fail(s"no build.sbt above $start"))
+  }
+
+  /** (file name, content) of every Scala source under `src/`. */
+  private lazy val sources: Seq[(Path, String)] = {
+    val walk = Files.walk(srcRoot)
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "SessionSurfaceSpec.scala")
+      .map(p => p -> Files.readString(p)).toList
+    finally walk.close()
+  }
+
+  test("SparkSession.builder appears only in GraftSession.scala") {
+    val builders = sources.filter(_._2.contains("SparkSession.builder"))
+      .map(_._1.getFileName.toString)
+    assert(builders == Seq("GraftSession.scala"), s"session builders in: $builders")
+  }
+
+  test("deleted knobs and row-reader names stay deleted") {
+    val banned = Seq("""GRAFT_BARRIER_EAGER""", """SPARK_GRAFT_SHUFFLE""",
+      """SCRATCH_(PARTS|AQE|PARFIRST|ROCKSDB|RAWFS|CKPT_FM)""", """vectorizedRead""",
+      """LogPartitionReader\(""").map(_.r)
+    val hits = for {
+      (p, text) <- sources
+      re <- banned
+      m <- re.findFirstIn(text)
+    } yield s"${srcRoot.relativize(p)}: $m"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the factory's session carries the engine settings") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000")
+    assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") ==
+      classOf[graft.core.FastLocalFileSystem].getName)
+    assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") ==
+      classOf[graft.streaming.NioCheckpointFileManager].getName)
+    assert(spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
+      .collect()(0).getDouble(0) == 11.0)
+  }
+
+  test("shuffle width follows the local master's core count") {
+    assert(GraftSession.localCores("local[8]").contains(8))
+    assert(GraftSession.localCores("local").contains(1))
+    assert(GraftSession.localCores("local[*]").contains(Runtime.getRuntime.availableProcessors))
+    assert(GraftSession.localCores("spark://host:7077").isEmpty)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4") // fixture: local[4]
+  }
+}

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** Shared local session for specs. One JVM-wide session (getOrCreate)
-  * keeps the suite fast; configs mirror Verify/Bench. */
+  * keeps the suite fast; it comes from [[GraftSession]], like Verify's
+  * and Bench's. */
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = SparkFixture.session
 
@@ -12,24 +13,10 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkFixture {
+  /** The production session factory's session (extensions included),
+    * so the whole suite exercises the engine Bench and Verify run. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE applies inside barrier-cached subtrees (mirrors Bench/Verify)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      // fork-free local-fs + NIO checkpoint manager (mirrors Bench/
-      // Verify so the whole suite exercises the production I/O layer)
-      .config("spark.hadoop.fs.file.impl", "graft.core.FastLocalFileSystem")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      .getOrCreate()
+    val s = GraftSession.create("local[4]")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

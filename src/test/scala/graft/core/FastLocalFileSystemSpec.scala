@@ -44,6 +44,19 @@ class FastLocalFileSystemSpec extends AnyFunSuite {
     } finally TempDirs.deleteRecursively(new java.io.File(dir))
   }
 
+  test("setPermission keeps the sticky bit (01777 on a directory)") {
+    val fs = freshFs()
+    val dir = Files.createTempDirectory("flfs_").toString
+    try {
+      val d = new Path(s"$dir/shared")
+      assert(fs.mkdirs(d))
+      fs.setPermission(d, new FsPermission(Integer.parseInt("1777", 8).toShort))
+      val mode = Files.getAttribute(Paths.get(dir, "shared"), "unix:mode")
+        .asInstanceOf[Int] & Integer.parseInt("7777", 8)
+      assert(mode == Integer.parseInt("1777", 8), f"mode is $mode%o")
+    } finally TempDirs.deleteRecursively(new java.io.File(dir))
+  }
+
   test("permissioned mkdirs and create work; checksum layer intact") {
     val fs = freshFs()
     val dir = Files.createTempDirectory("flfs_").toString

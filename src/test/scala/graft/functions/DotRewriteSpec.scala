@@ -1,31 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The HOF->native optimizer rewrite needs a session built WITH
-  * GraftExtensions (separate from the shared fixture session). */
-class DotRewriteSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    // getOrCreate returns any existing default session and silently
-    // IGNORES withExtensions — clear the defaults first so this suite
-    // gets a genuinely new session (sharing the JVM's SparkContext)
-    // regardless of which suite ran before it.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-rewrite-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+/** The HOF->native optimizer rewrite, on the fixture session (built
+  * WITH GraftExtensions by the session factory). */
+class DotRewriteSpec extends AnyFunSuite with graft.SparkFixture {
 
   private def hofDot = aggregate(
     zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0), (acc, x) => acc + x)

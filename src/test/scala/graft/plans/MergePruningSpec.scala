@@ -1,7 +1,6 @@
 package graft.plans
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.SnapshotLog
@@ -12,24 +11,7 @@ import graft.sources.LogSourceAudit
   * MERGE opens only the files whose key bounds overlap the source's
   * keys — not the whole table — while the result stays exact. A
   * NOT-MATCHED-BY-SOURCE merge (full-outer rewrite) must NOT prune. */
-class MergePruningSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    // getOrCreate ignores withExtensions on an existing default
-    // session — clear first (same pattern as DotRewriteSpec)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-merge-pruning-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class MergePruningSpec extends AnyFunSuite with graft.SparkFixture {
 
   /** 10 key-clustered files over ids [0, 1000). */
   private def clusteredTable(): String = {

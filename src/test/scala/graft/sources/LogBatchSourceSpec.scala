@@ -230,13 +230,13 @@ class LogBatchSourceSpec extends AnyFunSuite with SparkFixture {
       .toDF("path", "pos").coalesce(1).write.mode("overwrite").parquet(dir)
     val f = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
-    assert(LogPartitionReader.shardMayContain(f, "data/s1/a.parquet"))
-    assert(LogPartitionReader.shardMayContain(f, "data/s1/b.parquet"))
-    assert(!LogPartitionReader.shardMayContain(f, "data/s1/zzz.parquet"),
+    assert(LogColumnarReader.shardMayContain(f, "data/s1/a.parquet"))
+    assert(LogColumnarReader.shardMayContain(f, "data/s1/b.parquet"))
+    assert(!LogColumnarReader.shardMayContain(f, "data/s1/zzz.parquet"),
       "past the shard's max path: provably not here")
-    assert(!LogPartitionReader.shardMayContain(f, "data/s0/a.parquet"),
+    assert(!LogColumnarReader.shardMayContain(f, "data/s0/a.parquet"),
       "before the shard's min path: provably not here")
     // in-range but absent: bounds are conservative, the shard is kept
-    assert(LogPartitionReader.shardMayContain(f, "data/s1/ab.parquet"))
+    assert(LogColumnarReader.shardMayContain(f, "data/s1/ab.parquet"))
   }
 }

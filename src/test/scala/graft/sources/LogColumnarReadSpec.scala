@@ -9,10 +9,9 @@ import graft.core.SnapshotLog
 
 /** The VECTORIZED batch read path: plain `graft-log` batch scans
   * execute columnar (ColumnarBatch through Spark's vectorized parquet
-  * reader + ColumnarToRow), match the row reader bit-for-bit across
-  * the type surface, keep schema evolution and partition constants,
-  * and fall back to the row reader exactly where a row cursor is
-  * required (deletion vectors, metadata columns, streaming). SPJ key
+  * reader + ColumnarToRow) across the type surface, keep schema
+  * evolution and partition constants, and stay columnar where row
+  * ordinals matter (deletion vectors, metadata columns). SPJ key
   * groups stay columnar — see LogSpjSpec. */
 class LogColumnarReadSpec extends AnyFunSuite with SparkFixture {
 
@@ -187,7 +186,7 @@ class LogColumnarReadSpec extends AnyFunSuite with SparkFixture {
       s"dv files read every row (ordinals must not shift): decoded=$decodedDv")
   }
 
-  test("metadata columns ride constant/position vectors: columnar, identical to the row reader") {
+  test("metadata columns ride constant/position vectors: columnar, identical to Spark's parquet _metadata") {
     import spark.implicits._
     val t = freshTable()
     SnapshotLog.commit(spark,
@@ -202,11 +201,21 @@ class LogColumnarReadSpec extends AnyFunSuite with SparkFixture {
     val (viaCol, _, nColumnar) = audited {
       rows(batchRead(t).filter(col("id") < 250L))
     }
-    val viaRow = rows(spark.read.format("graft-log")
-      .option("vectorizedRead", "false").load(t).filter(col("id") < 250L))
+    // reference: Spark's own parquet reader over the same live files,
+    // (file_path, row_index) mapped back to the entry's table-relative
+    // path; the deleted ids are the dv's dead positions
+    val entries = SnapshotLog.resolve(t, SnapshotLog.latestVersion(t).get).entries
+    val relOf = entries.map(e =>
+      java.nio.file.Paths.get(SnapshotLog.dataAbs(t, e)).toAbsolutePath.normalize.toString -> e.path).toMap
+    val viaSpark = spark.read.parquet(entries.map(SnapshotLog.dataAbs(t, _)): _*)
+      .filter(col("id") < 250L && !col("id").between(10L, 19L))
+      .select(col("id"), col("_metadata.file_path"), col("_metadata.row_index"))
+      .collect().map(r => (r.getLong(0),
+        relOf(java.nio.file.Paths.get(new java.net.URI(r.getString(1))).normalize.toString),
+        r.getLong(2))).toSet
     assert(nColumnar > 0L, "metadata-column scans must stay vectorized")
-    assert(viaCol == viaRow,
-      "constant/position vectors must reproduce the row reader's metadata exactly")
+    assert(viaCol == viaSpark,
+      "constant/position vectors must reproduce Spark's file path and row index exactly")
     assert(viaCol.map(_._1) == (0L until 250L).toSet -- (10L to 19L))
     // positions asked => parquet skipping disabled (ordinals must not shift)
     val d0 = LogSourceAudit.rowsDecoded.get()

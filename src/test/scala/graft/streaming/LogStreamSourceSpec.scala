@@ -13,7 +13,7 @@ import graft.core.SnapshotLog
   * range's append commits introduced. These specs pin the streaming
   * contract — batching invariance, checkpoint resume (exactly-once
   * across restarts), the replace-commit wall, and type fidelity of
-  * the parquet-hadoop row reader. */
+  * the columnar micro-batch reader. */
 class LogStreamSourceSpec extends AnyFunSuite with SparkFixture {
 
   private def freshTable(): String =
@@ -121,7 +121,7 @@ class LogStreamSourceSpec extends AnyFunSuite with SparkFixture {
     assert(rows.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
   }
 
-  test("row reader type fidelity: decimal, timestamp, date, int, bool, binary round-trip") {
+  test("columnar micro-batch type fidelity: decimal, timestamp, date, int, bool, binary round-trip") {
     import spark.implicits._
     val t = freshTable()
     val data = Seq(
@@ -132,7 +132,13 @@ class LogStreamSourceSpec extends AnyFunSuite with SparkFixture {
       .withColumn("ts", col("ts").cast("timestamp"))
       .withColumn("d", col("d").cast("date"))
     SnapshotLog.commit(spark, data, t)
+    val f0 = graft.sources.LogSourceAudit.filesOpened.get()
+    val c0 = graft.sources.LogSourceAudit.columnarOpened.get()
     val (streamed, _) = drain(t, ck())
+    val opened = graft.sources.LogSourceAudit.filesOpened.get() - f0
+    assert(opened > 0L, "the stream must read the table's files")
+    assert(graft.sources.LogSourceAudit.columnarOpened.get() - c0 == opened,
+      s"every micro-batch file opens through the columnar reader ($opened opened)")
     val a = streamed.orderBy("id").collect()
     val b = SnapshotLog.read(spark, t).orderBy("id").collect()
     assert(a.length == b.length)

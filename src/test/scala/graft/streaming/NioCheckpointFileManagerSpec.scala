@@ -66,6 +66,40 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     }
   }
 
+  test("racing no-overwrite writers: exactly one wins each path and its bytes stay") {
+    withMgr { (fm, dir) =>
+      val writers = 8
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+      try {
+        (0 until 200).foreach { i =>
+          val target = new Path(s"$dir/race/$i")
+          // every writer has its bytes staged before any publishes
+          val outs = (0 until writers).map { w =>
+            val o = fm.createAtomic(target, overwriteIfPossible = false)
+            o.write(s"writer-$w".getBytes("UTF-8")); o
+          }
+          val start = new java.util.concurrent.CountDownLatch(1)
+          val results = outs.zipWithIndex.map { case (o, w) =>
+            pool.submit(new java.util.concurrent.Callable[Option[Int]] {
+              override def call(): Option[Int] = {
+                start.await()
+                try { o.close(); Some(w) }
+                catch { case _: FileAlreadyExistsException => None }
+              }
+            })
+          }
+          start.countDown()
+          val winners = results.flatMap(_.get())
+          assert(winners.size == 1, s"path $i: ${winners.size} writers published")
+          val got = new String(Files.readAllBytes(Paths.get(s"$dir/race/$i")), "UTF-8")
+          assert(got == s"writer-${winners.head}", s"path $i holds $got")
+        }
+        // losers' temp files are cleaned up: only the 200 targets remain
+        assert(Files.list(Paths.get(s"$dir/race")).count() == 200)
+      } finally pool.shutdownNow()
+    }
+  }
+
   test("open of a missing file raises java.io.FileNotFoundException") {
     withMgr { (fm, dir) =>
       intercept[java.io.FileNotFoundException] { fm.open(new Path(s"$dir/absent")) }
