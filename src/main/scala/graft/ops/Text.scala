@@ -153,20 +153,21 @@ object Text {
     * output while the bucket stage never sees a duplicate class at all.
     * Shuffle payload is (doc_id, fp) — ~50 B/row, never the text — and
     * the agg's map-side combine collapses each partition to one row per
-    * distinct content before the exchange. */
-  private def exactClassMap(docs: DataFrame): DataFrame = {
+    * distinct content before the exchange. A document with null text
+    * is its own singleton class: null content duplicates nothing. */
+  private[ops] def exactClassMap(docs: DataFrame): DataFrame = {
     // One shuffle, not two: rep = min(doc_id) over the content-hash
     // partition. The former groupBy(fp)+self-join shipped the (doc_id,
     // fp) table through the agg exchange AND both join exchanges; the
     // window needs exactly one hash exchange of the same narrow rows
-    // (guide §2.4 "remove shuffles outright"). Output identical UNDER
-    // THE CORPUS CONTRACT (text is never null — CorpusContractSpec):
-    // a null md5(text) row would have been dropped by the old inner
-    // equi-join but lands in the window's one null partition here
-    // (ADVICE r12 — noted, not filtered: the extra filter would cost
-    // every real corpus for a row the contract forbids).
+    // (guide §2.4 "remove shuffles outright"). Null-text rows all land
+    // in the window's one null partition, so they take rep = doc_id
+    // instead of that partition's min (the corpus contract forbids null
+    // text — CorpusContractSpec — but a dirty corpus must not turn it
+    // into one bogus duplicate class).
     val fps = docs.select(col("doc_id"), md5(col("text")).as("fp"))
-    fps.withColumn("rep", min(col("doc_id")).over(Window.partitionBy("fp")))
+    fps.withColumn("rep", when(col("fp").isNull, col("doc_id"))
+        .otherwise(min(col("doc_id")).over(Window.partitionBy("fp"))))
       .select(col("doc_id"), col("rep"))
   }
 

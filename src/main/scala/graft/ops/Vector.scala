@@ -555,15 +555,18 @@ object Vector {
   /** SemDeDup's survivor rule (Abbas et al. 2023): within each
     * semantic duplicate class keep the vector CLOSEST TO THE CLASS
     * MEAN — the member that best represents the cluster, not an
-    * arbitrary min-id. Shape: one hash-agg builds each class's
-    * centroid as 64 per-dimension DECIMAL sums (exact,
-    * order-independent — the k-means discipline), means round to 6dp,
-    * members join back on class_id and rank by rounded
+    * arbitrary min-id. Shape: one aggregate builds each class's
+    * centroid, members join back on class_id and rank by rounded
     * cosine-to-centroid with a vec_id tie-break. One agg + one join +
     * one per-class window — the `dedup_keep_best` shape in embedding
-    * space. Declared rows-only (trained-k-means upstream). */
-  def semanticKeepBest(spark: SparkSession, dir: String,
-                       dim: Int = 64): DataFrame = {
+    * space. Declared rows-only (trained-k-means upstream).
+    *
+    * Determinism: the class sums come from `graft_vsum`
+    * ([[graft.functions.VectorSum]]), exact DECIMAL(38,12) per
+    * dimension and so independent of partitioning and row order (the
+    * k-means discipline); each mean is the decimal sum over the class
+    * size, rounded to 6dp as a double. */
+  def semanticKeepBest(spark: SparkSession, dir: String): DataFrame = {
     // Barrier the class table: `member` feeds both the centroid
     // aggregate and the final rank join, so the lazy class subtree
     // (label join + sort) would replay twice in one plan.
@@ -572,12 +575,10 @@ object Vector {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), dbl(col("embedding")).as("emb"))
     val member = classes.join(e, "vec_id")
-    val sums = (0 until dim).map(i =>
-      sum(element_at(col("emb"), i + 1).cast("decimal(38,12)")).as(s"s$i")) :+
-      count(lit(1)).as("m")
-    val cents = member.groupBy("class_id").agg(sums.head, sums.tail: _*)
-      .select(col("class_id"), array((0 until dim).map(i =>
-        round((col(s"s$i") / col("m")).cast("double"), 6)): _*).as("ctr"))
+    val cents = member.groupBy("class_id")
+      .agg(GraftFunctions.vsum(spark, col("emb")).as("s"), count(lit(1)).as("m"))
+      .select(col("class_id"),
+        transform(col("s"), x => round((x / col("m")).cast("double"), 6)).as("ctr"))
     val w = Window.partitionBy("class_id")
       .orderBy(col("cos_ctr").desc, col("vec_id").asc)
     member.join(cents, "class_id")
@@ -603,10 +604,12 @@ object Vector {
     * K x dim centroid matrix between iterations (exactly how MLlib
     * k-means scales — centroids are broadcast-sized at any corpus
     * size). Determinism despite distributed float math: per-dim sums
-    * accumulate in DECIMAL(38,12) (exact, order-independent), means
-    * are rounded to 6dp after unit-normalization, and assignment
-    * tie-breaks on lowest list id — bit-stable across runs/partitions.
-    * Empty lists keep their previous centroid (standard Lloyd). */
+    * accumulate in DECIMAL(38,12) through `graft_vsum`
+    * ([[graft.functions.VectorSum]]: exact, order-independent, one
+    * aggregate for all dimensions), means are rounded to 6dp after
+    * unit-normalization, and assignment tie-breaks on lowest list id —
+    * bit-stable across runs/partitions. Empty lists keep their previous
+    * centroid (standard Lloyd). */
   def trainIvfCentroids(spark: SparkSession, dir: String, lists: Int = 8,
                         iters: Int = 5, dim: Int = 64): Seq[Seq[Double]] = {
     def unit(v: Seq[Double]): Seq[Double] = {
@@ -656,19 +659,17 @@ object Vector {
       while (it < iters && !converged) {
         val dots = array(cents.indices.map(kk =>
           round(nDot(spark)(col("u"), typedLit(cents(kk))), 6)): _*)
-        val sums = (0 until dim).map(i =>
-          sum(element_at(col("u"), i + 1).cast("decimal(38,12)")).as(s"s$i")) :+
-          count(lit(1)).as("n")
         val rows = u
           .withColumn("k", (array_position(dots, array_max(dots)) - 1).cast("int"))
-          .groupBy("k").agg(sums.head, sums.tail: _*)
+          .groupBy("k").agg(GraftFunctions.vsum(spark, col("u")), count(lit(1)))
           .collect() // K rows of K x dim decimals — centroid-sized, never data-sized
         val byK = rows.map(r => r.getInt(0) -> r).toMap
         val next = cents.indices.map { kk =>
           byK.get(kk) match {
             case Some(r) =>
-              val n = r.getLong(dim + 1).toDouble
-              unit((0 until dim).map(i => r.getDecimal(i + 1).doubleValue() / n))
+              val s = r.getSeq[java.math.BigDecimal](1)
+              val n = r.getLong(2).toDouble
+              unit((0 until dim).map(i => s(i).doubleValue() / n))
             case None => cents(kk)
           }
         }

@@ -38,6 +38,17 @@ object Bridge {
           filterBytes, org.apache.spark.sql.types.BinaryType),
         classic.ExpressionUtils.expression(key)))
 
+  /** Spark's own errors for the two decimal failures an exact sum of
+    * casts can meet under ANSI mode: a value that does not fit the
+    * target type (the cast's error) and an overflowing decimal sum
+    * (`sum`'s error). */
+  def decimalOutOfRange(value: org.apache.spark.sql.types.Decimal,
+      to: org.apache.spark.sql.types.DecimalType): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.cannotChangeDecimalPrecisionError(
+      value, to.precision, to.scale, null)
+  def decimalSumOverflow(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.overflowInSumOfDecimalError(null, "try_sum")
+
   /** Column <-> Expression bridging for graft's own Catalyst
     * expressions (the `Column(expr)` constructor is private[sql]). */
   def columnOf(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =

@@ -60,6 +60,31 @@ class SessionSurfaceSpec extends AnyFunSuite with SparkFixture {
       .collect()(0).getDouble(0) == 11.0)
   }
 
+  test("graft_vsum resolves on the factory session and after ensureRegistered alone") {
+    val q = "SELECT graft_vsum(v) FROM VALUES (array(1.5d, -2.0d)), (array(0.25d, 1.0d)) AS t(v)"
+    def check(s: org.apache.spark.sql.SparkSession): Unit =
+      assert(s.sql(q).collect()(0).getSeq[java.math.BigDecimal](0) ==
+        Seq("1.75", "-1").map(x => new java.math.BigDecimal(x).setScale(12)))
+    check(spark)
+    // a session whose registry lacks the function (as one built without
+    // GraftExtensions) gets it from ensureRegistered
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_vsum")
+    val bare = spark.newSession()
+    bare.sessionState.functionRegistry.dropFunction(id)
+    assert(scala.util.Try(bare.sql(q).collect()).isFailure)
+    assert(spark.sessionState.functionRegistry.functionExists(id), "registries are per session")
+    graft.functions.GraftFunctions.ensureRegistered(bare)
+    check(bare)
+  }
+
+  test("the per-dimension decimal sum loop stays out of Vector.scala") {
+    val vector = sources.collectFirst {
+      case (p, text) if p.endsWith(Paths.get("graft", "ops", "Vector.scala")) => text
+    }.getOrElse(fail("no src/main/scala/graft/ops/Vector.scala"))
+    assert(!vector.contains("""cast("decimal(38,12)")"""),
+      "Vector.scala sums dimensions as decimal columns again; use graft_vsum")
+  }
+
   test("shuffle width follows the local master's core count") {
     assert(GraftSession.localCores("local[8]").contains(8))
     assert(GraftSession.localCores("local").contains(1))

@@ -126,4 +126,13 @@ class DedupScaleSpec extends AnyFunSuite with SparkFixture {
     // disjoint vocabulary shares nothing
     assert(cov(101L) == 0.0, s"unrelated doc scored ${cov(101L)}, expected 0.0")
   }
+
+  test("exact class map: null-text documents are singletons, not one duplicate class") {
+    import spark.implicits._
+    val docs = Seq((1L, "same words here"), (2L, null), (3L, "same words here"), (4L, null),
+      (5L, "other words"))
+      .toDF("doc_id", "text").repartition(3)
+    val rep = Text.exactClassMap(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(rep == Map(1L -> 1L, 2L -> 2L, 3L -> 1L, 4L -> 4L, 5L -> 5L), s"classes: $rep")
+  }
 }

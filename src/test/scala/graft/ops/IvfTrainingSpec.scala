@@ -1,7 +1,9 @@
 package graft.ops
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
+import graft.functions.GraftFunctions
 
 /** Trained IVF centroids (VERDICT r3 #8): deterministic spherical
   * k-means must produce lists that recall MORE of the brute-force
@@ -29,6 +31,40 @@ class IvfTrainingSpec extends AnyFunSuite with SparkFixture {
     val a = Vector.trainIvfCentroids(spark, sf, lists = 8, iters = 3)
     val b = Vector.trainIvfCentroids(spark, sf, lists = 8, iters = 3)
     assert(a == b, "training must be bit-stable (decimal sums + rounded unit vectors)")
+  }
+
+  /** The Lloyd loop with its per-dimension column aggregate — `dim`
+    * separate `sum(cast(element_at(u, i) AS DECIMAL(38,12)))` — the form
+    * `graft_vsum` replaced; the reference the trainer must equal. */
+  private def columnFormCentroids(dir: String, lists: Int, iters: Int, dim: Int): Seq[Seq[Double]] = {
+    def unit(v: Seq[Double]): Seq[Double] = {
+      val n = math.sqrt(v.map(x => x * x).sum)
+      if (n == 0.0) v else v.map(x => math.rint(x / n * 1e6) / 1e6)
+    }
+    val u = graft.core.Tables.embeddings(spark, dir)
+      .select(transform(col("embedding"), _.cast("double")).as("emb"))
+      .withColumn("nrm", sqrt(GraftFunctions.dot(spark, col("emb"), col("emb"))))
+      .select(transform(col("emb"), x => x / col("nrm")).as("u"))
+    (0 until iters).foldLeft(Vector.pseudoRandomCentroids(lists, dim).map(unit)) { (cents, _) =>
+      val dots = array(cents.indices.map(kk =>
+        round(GraftFunctions.dot(spark, col("u"), typedLit(cents(kk))), 6)): _*)
+      val sums = (0 until dim).map(i =>
+        sum(element_at(col("u"), i + 1).cast("decimal(38,12)")).as(s"s$i")) :+
+        count(lit(1)).as("n")
+      val byK = u.withColumn("k", (array_position(dots, array_max(dots)) - 1).cast("int"))
+        .groupBy("k").agg(sums.head, sums.tail: _*)
+        .collect().map(r => r.getInt(0) -> r).toMap
+      cents.indices.map(kk => byK.get(kk).fold(cents(kk)) { r =>
+        val n = r.getLong(dim + 1).toDouble
+        unit((0 until dim).map(i => r.getDecimal(i + 1).doubleValue() / n))
+      })
+    }
+  }
+
+  test("trained centroids equal the per-dimension column-form Lloyd loop bit for bit") {
+    val got = Vector.trainIvfCentroids(spark, sf, lists = 8, iters = 5)
+    val ref = columnFormCentroids(sf, lists = 8, iters = 5, dim = 64)
+    assert(got == ref, "graft_vsum must reproduce the column-form sums exactly")
   }
 
   test("trained centroids recall >= pseudo-random at the same probe budget") {

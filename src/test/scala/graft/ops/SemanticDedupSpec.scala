@@ -1,8 +1,11 @@
 package graft.ops
 
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
+import graft.functions.GraftFunctions
 
 /** SemDeDup-style semantic dedup (trained-list blocking + exact
   * within-list cosine): planted-parallel recall, agreement with the
@@ -111,9 +114,12 @@ class SemanticDedupSpec extends AnyFunSuite with SparkFixture {
 
   test("semantic_keep_best: one survivor per class, and it is the closest to the mean") {
     val sf = "/root/testdata/sf0.001"
-    val rows = Vector.semanticKeepBest(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
+    val out = Vector.semanticKeepBest(spark, sf).collect().toSeq
+    val rows = out.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
     assert(rows.nonEmpty)
+    // bit-identical to the per-dimension column-form centroids, in order
+    val ref = columnFormKeepBest(sf)
+    assert(out == ref, s"first difference: ${out.zip(ref).find(p => p._1 != p._2)}")
     // membership equals semantic_dup_classes exactly
     val classesOf = Vector.semanticDupClasses(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -125,5 +131,30 @@ class SemanticDedupSpec extends AnyFunSuite with SparkFixture {
       assert(kept.head._1 == best._1,
         s"class $cid kept ${kept.head} but the centroid-closest is $best")
     }
+  }
+
+  /** `semanticKeepBest` with its class centroids as `dim` separate
+    * decimal sums — the form graft_vsum replaced — and the rest of the
+    * operator unchanged: the reference its rows must equal, in order. */
+  private def columnFormKeepBest(dir: String, dim: Int = 64): Seq[Row] = {
+    def dot(a: Column, b: Column) = GraftFunctions.dot(spark, a, b)
+    val member = Vector.semanticDupClasses(spark, dir).join(
+      spark.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("emb")),
+      "vec_id")
+    val sums = (0 until dim).map(i =>
+      sum(element_at(col("emb"), i + 1).cast("decimal(38,12)")).as(s"s$i")) :+
+      count(lit(1)).as("m")
+    val cents = member.groupBy("class_id").agg(sums.head, sums.tail: _*)
+      .select(col("class_id"), array((0 until dim).map(i =>
+        round((col(s"s$i") / col("m")).cast("double"), 6)): _*).as("ctr"))
+    val w = Window.partitionBy("class_id").orderBy(col("cos_ctr").desc, col("vec_id").asc)
+    member.join(cents, "class_id")
+      .select(col("vec_id"), col("class_id"),
+        round(dot(col("emb"), col("ctr"))
+          / (sqrt(dot(col("emb"), col("emb"))) * sqrt(dot(col("ctr"), col("ctr")))), 4).as("cos_ctr"))
+      .withColumn("keep", row_number().over(w) === 1)
+      .orderBy("vec_id")
+      .collect().toSeq
   }
 }
