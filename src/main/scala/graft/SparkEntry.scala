@@ -2162,8 +2162,8 @@ object SparkEntry {
         |SELECT o_orderstatus, count(*) AS n_orders,
         |  CAST(round(sum(p), 2) AS DOUBLE) AS total
         |FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "log_sql_delete" -> // SQL DELETE FROM via SupportsDelete: the key band
-      // dies by deletion vectors, zero files rewritten
+    "log_sql_delete" -> // SQL DELETE FROM as a row-level delta: the key
+      // band dies by deletion vectors, zero files rewritten
       """SELECT o_orderstatus, count(*) AS n_orders,
         |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS total
         |FROM orders WHERE o_orderkey <= 30000

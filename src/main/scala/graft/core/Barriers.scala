@@ -77,8 +77,6 @@ object Barriers {
     // coalescing is the right call at every scale — it only produces a
     // 1-partition barrier when the data is small enough that one core
     // is fastest. See OPTIMIZATION_r13.md "negative results".
-    if (sys.env.get("GRAFT_BARRIER_DEBUG").contains("1"))
-      System.err.println(s"[barrier] $tag parts=${rdd.getNumPartitions}")
     out
   }
 

@@ -1067,7 +1067,7 @@ object SnapshotLog {
   }
 
   /** Publish a rewrite record with explicit entries (shared by
-    * `commitRewrite`, which staged a DataFrame, and `deleteWhere`,
+    * `commitRewrite`, which staged a DataFrame, and `commitDelta`,
     * which re-lists existing entries with deletion vectors attached).
     * Conditional create-new at expectedHead+1.
     *
@@ -1448,94 +1448,66 @@ object SnapshotLog {
   }
 
   /** MERGE-ON-READ DELETE (deletion vectors — Delta 3's shape): mark
-    * every row matching `p` deleted by writing a POSITION SIDECAR
-    * (`dv/<uuid>`, rows of (path, pos)) and re-listing the affected
-    * entries with the vector attached — no data file is rewritten.
+    * every row matching `p` deleted by re-listing the affected entries
+    * with a position sidecar attached — no data file is rewritten.
     * This is the delete shape copy-on-write cannot serve: a predicate
     * matching a few rows in MANY files (a GDPR purge by user id on a
     * time-clustered table) would rewrite every touched file under
-    * COW; here it writes O(matched rows) of sidecar. Readers apply
-    * vectors at scan time (`readTagged`); bounds stay conservative
-    * (deletion only shrinks row sets), so data skipping is
-    * unaffected; compaction/merge materialize the deletions naturally
-    * (their rewrites read through the vectors). File pruning applies
-    * twice: only files whose bounds might match `p` are even
+    * COW; here it writes O(matched rows) of sidecar. File pruning
+    * applies twice: only files whose bounds might match `p` are even
     * scanned, and files where nothing matched keep their entries
-    * untouched. The deleted rows are recorded as change data, so the
-    * feed delivers them as `delete` rows. The new sidecar carries the
-    * affected files' old positions too (newest vector ⊇ older — what
-    * makes multi-stage vector unions safe), and `vacuum` retires
-    * sidecars with the versions that referenced them. */
-  /** Past this many positions a delete's sidecar shards by data-file
-    * path instead of writing one file (var: test seam). */
-  private[core] var dvShardRowsLimit: Long = 4L << 20
-
+    * untouched. The matched (path, pos) positions land through
+    * `commitDelta`, the same commit SQL DELETE/UPDATE/MERGE take:
+    * sidecar, change data (`delete` rows) and the CAS against the
+    * version read. Readers apply vectors at scan time (`readTagged`);
+    * bounds stay conservative (deletion only shrinks row sets), so
+    * data skipping is unaffected; compaction/merge materialize the
+    * deletions (their rewrites read through the vectors). */
   def deleteWhere(spark: SparkSession, table: String, p: Pred): Long = {
-    import spark.implicits._
     val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
     val st = resolve(table, headV)
     val pp = renamePred(p, st.physOf) // logical predicate in, physical files
     val cand = st.entries.filter(mightMatch(_, pp))
     if (cand.isEmpty) return headV // provably nothing to delete
     val data = readTagged(spark, table, cand) // live rows only (dvs applied)
-    val matched = data.filter(predColumn(data, pp)).persist()
+    val pos = data.filter(predColumn(data, pp))
+      .select(col(RelCol).as("path"), col(PosCol).as("pos")).persist()
     try {
-      val counts = matched.groupBy(RelCol).count().collect()
+      val counts = pos.groupBy("path").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (counts.isEmpty) return headV // no live row matched: no-op
-      val affected = cand.filter(e => counts.contains(e.path))
-      val newPos = matched.select(col(RelCol).as("path"), col(PosCol).as("pos"))
-      val oldDvDirs = affected.flatMap(_.dv).distinct
-      val allPos =
-        if (oldDvDirs.isEmpty) newPos
-        else newPos.unionByName(
-          spark.read.parquet(oldDvDirs.map(d => sideAbs(table, d)): _*)
-            .join(affected.map(_.path).toDF("path"), Seq("path"), "left_semi"))
-      val dvStage = java.util.UUID.randomUUID().toString
-      // position rows are (string, long) — tiny for targeted deletes,
-      // so ONE file keeps the sidecar read a single open; but a
-      // predicate matching ~10^9 rows (a GDPR purge) must not funnel
-      // the whole position set through one task — past the threshold
-      // the sidecar SHARDS by data-file path (the read side already
-      // unions every file in the dv directory, so sharding is
-      // invisible to readers)
-      val totalPos = counts.values.sum + affected.map(_.dvRows).sum
-      val laidPos =
-        if (totalPos <= dvShardRowsLimit) allPos.repartition(1)
-        else { // ~dvShardRowsLimit positions per shard, path-contiguous;
-          // the EXPLICIT shard count keeps AQE from re-coalescing
-          val shards = math.min(10000L, totalPos / dvShardRowsLimit + 1L).toInt
-          allPos.repartitionByRange(shards, col("path"), col("pos"))
-        }
-      laidPos.write.parquet(s"$table/dv/$dvStage")
-      val cdc = matched.drop(RelCol, PosCol)
-        .withColumn("_change_type", lit("delete"))
-      val (_, cdcEntries) =
-        stageEntries(spark, cdc, table, Seq.empty, Seq.empty, root = "cdc")
-      val newEntries = affected.map(e => e.copy(
-        dv = Some(s"dv/$dvStage"), dvRows = e.dvRows + counts(e.path)))
-      publishRewrite(table, affected.map(_.path), newEntries,
-        recordSchema = None, cdcEntries = cdcEntries,
-        cdcSchema = Some(cdc.schema.json),
-        expectedHead = headV, dataChange = true)
-    } finally { matched.unpersist(); () }
+      // no live row matched: empty counts make commitDelta a no-op
+      commitDelta(spark, table, headV, Some(pos), counts, Seq.empty, None)
+    } finally { pos.unpersist(); () }
   }
 
-  /** ROW-LEVEL DELTA COMMIT — the landing half of SQL DELETE/UPDATE/
-    * MERGE (`SupportsDelta`): tasks already wrote the inserted rows as
-    * staged data files and the killed rows' (path, pos) coordinates as
-    * a position set; this publishes both as ONE rewrite commit:
-    * affected entries re-list with a deletion vector (old vectors
-    * union in — newest ⊇ older), staged inserts append, the change
-    * feed gets the killed rows' PRE-IMAGES tagged `delete` plus the
-    * inserted rows tagged `insert` (an update is its delete+insert
-    * pair), and the whole thing is CAS'd against `expectedHead` — the
-    * version the operation's SCAN was pinned at, so a concurrent
-    * writer that touched the same files fails the disjoint check
-    * loudly instead of silently resurrecting or double-killing rows.
-    * Zero data files are rewritten (merge-on-read, Delta 3's DML
-    * shape). `posCounts` is task-counted dead rows per file — the
-    * commit plans with no counting job. */
+  /** Past this many positions a delete's sidecar shards by data-file
+    * path instead of writing one file (var: test seam). */
+  private[core] var dvShardRowsLimit: Long = 4L << 20
+
+  /** ROW-LEVEL DELTA COMMIT — the one landing path of every
+    * merge-on-read delete: SQL DELETE/UPDATE/MERGE (`SupportsDelta`)
+    * and `deleteWhere`. The killed rows arrive as (path, pos)
+    * coordinates of LIVE rows (`posDf`), inserted rows as staged data
+    * files; this publishes both as ONE rewrite commit: affected
+    * entries re-list with a deletion vector (old vectors union in —
+    * newest ⊇ older), staged inserts append, the change feed gets the
+    * killed rows' PRE-IMAGES tagged `delete` plus the inserted rows
+    * tagged `insert` (an update is its delete+insert pair), and the
+    * whole thing is CAS'd against `expectedHead` — the version the
+    * positions were read at, so a concurrent writer that touched the
+    * same files fails the disjoint check loudly instead of silently
+    * resurrecting or double-killing rows. Zero data files are
+    * rewritten (merge-on-read, Delta 3's DML shape). `posCounts` is
+    * the dead rows per file — the commit plans with no counting job.
+    *
+    * The new sidecar (`dv/<uuid>`) carries the affected files' old
+    * positions too (what makes multi-stage vector unions safe);
+    * `vacuum` retires sidecars with the versions that referenced
+    * them. Position rows are (string, long) — tiny for targeted
+    * deletes, so ONE file keeps the sidecar read a single open; past
+    * `dvShardRowsLimit` (a GDPR purge of ~10^9 rows must not funnel
+    * through one task) the sidecar SHARDS by data-file path, which
+    * readers never notice (they union every file in the directory). */
   def commitDelta(spark: SparkSession, table: String, expectedHead: Long,
                   posDf: Option[DataFrame], posCounts: Map[String, Long],
                   insertAdds: Seq[FileEntry],
@@ -1543,39 +1515,27 @@ object SnapshotLog {
     import spark.implicits._
     if (posCounts.isEmpty && insertAdds.isEmpty) return expectedHead // no-op DML
     val st = resolve(table, expectedHead)
-    // CHECK constraints over the DML's staged INSERT rows (SQL MERGE /
-    // UPDATE post-images written by executor tasks bypass the commit
-    // stats pass): one driver-triggered aggregate over the insert
-    // files, pre-publish — a violating DML never becomes visible.
-    // Deletes only remove rows and need no check.
+    // the staged INSERT rows (SQL MERGE / UPDATE post-images written by
+    // executor tasks), read by the constraint check and the change feed
+    lazy val inserted = spark.read
+      .schema(org.apache.spark.sql.types.DataType.fromJson(insertSchemaJson.get)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .parquet(insertAdds.map(e => dataAbs(table, e)): _*)
+    // CHECK constraints over the staged inserts (they bypass the commit
+    // stats pass): one driver-triggered aggregate, pre-publish — a
+    // violating DML never becomes visible. Deletes only remove rows
+    // and need no check.
     val checks = Constraints.of(st.props)
     if (checks.nonEmpty && insertAdds.nonEmpty) {
-      val ins = spark.read
-        .schema(org.apache.spark.sql.types.DataType.fromJson(insertSchemaJson.get)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .parquet(insertAdds.map(e => dataAbs(table, e)): _*)
       val cks = checks.map { case (n, ex) =>
         (n, ex, Constraints.violationsCol(spark, ex, l => {
           val p = st.physOf(l)
-          if (ins.columns.contains(p)) Some(p) else None
+          if (inserted.columns.contains(p)) Some(p) else None
         }))
       }
-      val row = ins.agg(cks.head._3, cks.tail.map(_._3): _*).head()
+      val row = inserted.agg(cks.head._3, cks.tail.map(_._3): _*).head()
       Constraints.enforce(table,
         cks.zipWithIndex.map { case ((n, ex, _), i) => (n, ex, row.getLong(i)) })
-    }
-    if (posCounts.isEmpty) {
-      // pure-insert delta (a MERGE whose clauses only inserted)
-      val ins = spark.read
-        .schema(org.apache.spark.sql.types.DataType.fromJson(insertSchemaJson.get)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .parquet(insertAdds.map(e => dataAbs(table, e)): _*)
-      val cdcDf = ins.withColumn("_change_type", lit("insert"))
-      val (_, cdcEntries) = stageEntries(spark, cdcDf, table, Seq.empty, Seq.empty, root = "cdc")
-      return publishRewrite(table, Seq.empty, insertAdds,
-        recordSchema = insertSchemaJson, cdcEntries = cdcEntries,
-        cdcSchema = Some(cdcDf.schema.json), expectedHead = expectedHead,
-        dataChange = true)
     }
     val byPath = st.entries.map(e => e.path).toSet
     posCounts.keys.find(!byPath.contains(_)).foreach(p => sys.error(
@@ -1583,48 +1543,51 @@ object SnapshotLog {
         "the scan and the write disagree about the snapshot"))
     val affected = st.entries.filter(e => posCounts.contains(e.path))
     // fail BEFORE touching disk: merge-on-read vectors (and the cdc
-    // pre-image read) support flat staged layouts only — same contract
-    // as deleteWhere; hive-partitioned tables take COW merge instead
+    // pre-image read) support flat staged layouts only; hive-partitioned
+    // tables take COW merge instead
     affected.find(_.path.split("/").drop(2).exists(_.contains("="))).foreach(e =>
       sys.error(s"row-level DML supports flat staged layouts only; " +
         s"${e.path} is hive-partitioned — use SnapshotLog.merge/applyChanges (COW)"))
-    val newPos = posDf.get
-    val dvStage = java.util.UUID.randomUUID().toString
-    val oldDvDirs = affected.flatMap(_.dv).distinct
-    val allPos =
-      if (oldDvDirs.isEmpty) newPos
-      else newPos.unionByName(
-        spark.read.parquet(oldDvDirs.map(d => sideAbs(table, d)): _*)
-          .join(affected.map(_.path).toDF("path"), Seq("path"), "left_semi"))
-    val totalPos = posCounts.values.sum + affected.map(_.dvRows).sum
-    val laidPos =
-      if (totalPos <= dvShardRowsLimit) allPos.repartition(1)
+    val relisted =
+      if (affected.isEmpty) Seq.empty // pure-insert delta (a MERGE that only inserted)
       else {
-        val shards = math.min(10000L, totalPos / dvShardRowsLimit + 1L).toInt
-        allPos.repartitionByRange(shards, col("path"), col("pos"))
+        val newPos = posDf.get
+        val dvStage = java.util.UUID.randomUUID().toString
+        val oldDvDirs = affected.flatMap(_.dv).distinct
+        val allPos =
+          if (oldDvDirs.isEmpty) newPos
+          else newPos.unionByName(
+            spark.read.parquet(oldDvDirs.map(d => sideAbs(table, d)): _*)
+              .join(affected.map(_.path).toDF("path"), Seq("path"), "left_semi"))
+        val totalPos = posCounts.values.sum + affected.map(_.dvRows).sum
+        val laidPos =
+          if (totalPos <= dvShardRowsLimit) allPos.repartition(1)
+          else { // ~dvShardRowsLimit positions per shard, path-contiguous;
+            // the EXPLICIT shard count keeps AQE from re-coalescing
+            val shards = math.min(10000L, totalPos / dvShardRowsLimit + 1L).toInt
+            allPos.repartitionByRange(shards, col("path"), col("pos"))
+          }
+        laidPos.write.parquet(s"$table/dv/$dvStage")
+        affected.map(e => e.copy(
+          dv = Some(s"dv/$dvStage"), dvRows = e.dvRows + posCounts(e.path)))
       }
-    laidPos.write.parquet(s"$table/dv/$dvStage")
-    // change data: pre-images of exactly the killed positions
-    val pre = readTagged(spark, table, affected)
-      .join(newPos.withColumnRenamed("path", RelCol).withColumnRenamed("pos", PosCol),
-        Seq(RelCol, PosCol), "left_semi")
-      .drop(RelCol, PosCol).withColumn("_change_type", lit("delete"))
-    val cdcDf =
-      if (insertAdds.isEmpty) pre
-      else pre.unionByName(
-        spark.read
-          .schema(org.apache.spark.sql.types.DataType.fromJson(insertSchemaJson.get)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(insertAdds.map(e => dataAbs(table, e)): _*)
-          .withColumn("_change_type", lit("insert")),
-        allowMissingColumns = true)
+    // change data: pre-images of exactly the killed positions, then the
+    // inserted rows
+    val pre =
+      if (affected.isEmpty) None
+      else Some(readTagged(spark, table, affected, only = posDf)
+        .drop(RelCol, PosCol).withColumn("_change_type", lit("delete")))
+    val ins =
+      if (insertAdds.isEmpty) None
+      else Some(inserted.withColumn("_change_type", lit("insert")))
+    val cdcDf = (pre ++ ins).reduce(_.unionByName(_, allowMissingColumns = true))
     val (_, cdcEntries) = stageEntries(spark, cdcDf, table, Seq.empty, Seq.empty, root = "cdc")
-    val newEntries = affected.map(e => e.copy(
-      dv = Some(s"dv/$dvStage"), dvRows = e.dvRows + posCounts(e.path)))
-    publishRewrite(table, affected.map(_.path), newEntries ++ insertAdds,
-      recordSchema = insertSchemaJson, cdcEntries = cdcEntries,
-      cdcSchema = Some(cdcDf.schema.json), expectedHead = expectedHead,
-      dataChange = true)
+    // the record's schema describes the files it ADDS; a pure delete
+    // adds none (re-listed entries keep their own schemas)
+    publishRewrite(table, affected.map(_.path), relisted ++ insertAdds,
+      recordSchema = insertSchemaJson.filter(_ => insertAdds.nonEmpty),
+      cdcEntries = cdcEntries, cdcSchema = Some(cdcDf.schema.json),
+      expectedHead = expectedHead, dataChange = true)
   }
 
   // ----------------------------------------------------------------- reads
@@ -1811,45 +1774,68 @@ object SnapshotLog {
 
   /** Read FLAT entries with their table-relative path and in-file row
     * position tagged (`_metadata.file_path` / `_metadata.row_index` —
-    * the public parquet metadata columns), with any deletion vectors
-    * APPLIED: dead (path, pos) pairs anti-join away at scan time.
-    * This is both the merge-on-read read (drop the tags) and the
-    * position source `deleteWhere` builds new sidecars from. Safe to
-    * union multiple dv stages: stage paths are uuid-unique and a
-    * file's newest sidecar is a superset of its older ones (the
-    * deleteWhere invariant), so stray older rows can never delete a
-    * position the newest vector keeps. */
+    * the public parquet metadata columns).
+    *
+    * With `only = None`, deletion vectors are APPLIED: dead (path, pos)
+    * pairs anti-join away at scan time. This is both the merge-on-read
+    * read (drop the tags) and the live-row source `deleteWhere` picks
+    * positions from. Safe to union multiple dv stages: stage paths are
+    * uuid-unique and a file's newest sidecar is a superset of its older
+    * ones (`commitDelta`'s invariant), so stray older rows can never
+    * delete a position the newest vector keeps.
+    *
+    * With `only = Some(pos)`, a (path, pos) set of LIVE rows, it
+    * returns exactly the rows at those positions — a delete's
+    * pre-images. No vector applies: the positions are live by
+    * construction (the row-level scan and `deleteWhere` both read
+    * through the vectors). Rows first semi-join on the row ordinal
+    * alone, so only the survivors pay the path regexp, and an exact
+    * (path, pos) semi-join then drops an ordinal killed in another
+    * file. */
   private def readTagged(spark: SparkSession, table: String,
-                         entries: Seq[FileEntry]): DataFrame = {
+                         entries: Seq[FileEntry],
+                         only: Option[DataFrame] = None): DataFrame = {
     entries.find(_.path.split("/").drop(2).exists(_.contains("="))).foreach(e =>
       sys.error(s"merge-on-read supports flat staged layouts only: ${e.path}"))
     def schemaOf(sj: String): org.apache.spark.sql.types.StructType =
       org.apache.spark.sql.types.DataType.fromJson(sj)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
-    def tag(df: DataFrame): DataFrame = df
-      .withColumn(RelCol, regexp_extract(col("_metadata.file_path"),
-        "(?:data|cdc)/[^/]+/[^/=]+$", 0))
-      .withColumn(PosCol, col("_metadata.row_index"))
     val reads = entries.groupBy(_.schema).toSeq
       .sortBy(_._2.map(_.path).min).flatMap {
         case (Some(sj), es) =>
-          Seq(tag(spark.read.schema(schemaOf(sj))
-            .parquet(es.map(e => dataAbs(table, e)).sorted: _*)))
+          Seq(spark.read.schema(schemaOf(sj))
+            .parquet(es.map(e => dataAbs(table, e)).sorted: _*))
         case (None, es) => es.groupBy(e => stageOf(e.path)).toSeq.sortBy(_._1)
           .map { case (_, ss) =>
-            tag(spark.read.parquet(ss.map(e => dataAbs(table, e)).sorted: _*))
+            spark.read.parquet(ss.map(e => dataAbs(table, e)).sorted: _*)
           }
       }
-    val tagged = reads.reduce(_.unionByName(_, allowMissingColumns = true))
-    // the RelCol regexp extracts the SOURCE-relative "data/<stage>/<f>"
-    // from the absolute path, so clone entries key identically to the
-    // source's dv rows
-    val dvDirs = entries.flatMap(_.dv).distinct.sorted
-    if (dvDirs.isEmpty) tagged
-    else tagged.join(
-      spark.read.parquet(dvDirs.map(d => sideAbs(table, d)): _*)
-        .select(col("path").as(RelCol), col("pos").as(PosCol)),
-      Seq(RelCol, PosCol), "left_anti")
+    // collision-proof temp column for the absolute file path: a user
+    // column literally named _graft_file0 must survive the read
+    val fileCol = Iterator.from(0).map(i => s"_graft_file$i")
+      .find(c => !reads.exists(_.columns.contains(c))).get
+    val raw = reads.map(_
+      .withColumn(fileCol, col("_metadata.file_path"))
+      .withColumn(PosCol, col("_metadata.row_index")))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    def tag(df: DataFrame): DataFrame = df
+      // the SOURCE-relative "data/<stage>/<f>" of the absolute path, so
+      // clone entries key identically to the source's dv rows
+      .withColumn(RelCol, regexp_extract(col(fileCol), "(?:data|cdc)/[^/]+/[^/=]+$", 0))
+      .drop(fileCol)
+    only match {
+      case Some(pos) =>
+        tag(raw.join(pos.select(col("pos").as(PosCol)), Seq(PosCol), "left_semi"))
+          .join(pos.select(col("path").as(RelCol), col("pos").as(PosCol)),
+            Seq(RelCol, PosCol), "left_semi")
+      case None =>
+        val dvDirs = entries.flatMap(_.dv).distinct.sorted
+        if (dvDirs.isEmpty) tag(raw)
+        else tag(raw).join(
+          spark.read.parquet(dvDirs.map(d => sideAbs(table, d)): _*)
+            .select(col("path").as(RelCol), col("pos").as(PosCol)),
+          Seq(RelCol, PosCol), "left_anti")
+    }
   }
 
   /** The table's schema with ZERO rows — what a fully-pruned read
@@ -2518,7 +2504,7 @@ object SnapshotLog {
     * fails fast — that delta genuinely is not derivable. Maintenance
     * commits are invisible. Delete-row SHAPE follows the producer:
     * `applyChanges` records the feed-supplied columns (typically the
-    * key with null data columns), while `deleteWhere` records the full
+    * key with null data columns), while `commitDelta` records the full
     * pre-image rows it positively identified — consumers keying on the
     * delete's key column work with both; pre-image columns are a
     * bonus, not a contract. The read plans one scan per commit in the

@@ -841,9 +841,12 @@ object LogBatchQueries {
       .orderBy("o_orderstatus")
   }
 
-  /** SQL `DELETE FROM` (SupportsDelete): the mid-price band dies via
-    * deletion vectors from a pure-SQL statement on a registered
-    * graft-log table; the surviving rows aggregate oracle-exact. */
+  /** SQL `DELETE FROM`: the key band dies via deletion vectors from a
+    * pure-SQL statement on a registered graft-log table. The delete
+    * plans as a delta-based row-level operation whose pinned scan
+    * prunes files by the band, and lands through
+    * `SnapshotLog.commitDelta`; the surviving rows aggregate
+    * oracle-exact. */
   def logSqlDelete(spark: SparkSession, dir: String): DataFrame = {
     val t = graft.core.TempDirs.stable(s"logsql_del:$dir")
     graft.core.TempDirs.deleteRecursively(new java.io.File(t))
@@ -1037,64 +1040,6 @@ object LogFilters {
     case t: java.time.LocalDateTime =>
       Some((t.toEpochSecond(java.time.ZoneOffset.UTC).toDouble, 1.0))
     case _ => None // strings handled structurally; dates are un-indexed
-  }
-
-  /** ROW-EXACT translation for SQL DELETE (`SupportsDelete`): unlike
-    * `toPred` — whose job is conservative FILE skipping, where
-    * widening (timestamp slack, half-conjunctions) only keeps extra
-    * files — a delete predicate must select exactly the user's rows.
-    * So: no timestamps (slack), no decimals (double view may round),
-    * strict inequalities rebuilt exactly (integral +1 / floating
-    * nextUp — the literal already carries the column's type), AND
-    * requires BOTH sides, anything else refuses (Spark then reports
-    * the delete as unsupported instead of deleting the wrong rows). */
-  def toExactPred(f: Filter): Option[Pred] = {
-    def exact(v: Any): Option[Double] = v match {
-      case null => None
-      case n: Byte => Some(n.toDouble)
-      case n: Short => Some(n.toDouble)
-      case n: Int => Some(n.toDouble)
-      case n: Long if n > -(1L << 53) && n < (1L << 53) => Some(n.toDouble)
-      case n: Float => Some(n.toDouble)
-      case n: Double => Some(n)
-      case _ => None // decimals/timestamps/dates: not provably exact in the double view
-    }
-    def succ(v: Any): Option[Double] = v match {
-      case n: Byte => Some((n + 1).toDouble)
-      case n: Short => Some((n + 1).toDouble)
-      case n: Int => Some((n + 1L).toDouble)
-      case n: Long if n > -(1L << 53) && n + 1 < (1L << 53) => Some((n + 1).toDouble)
-      case n: Float => Some(math.nextUp(n).toDouble)
-      case n: Double => Some(math.nextUp(n))
-      case _ => None
-    }
-    def pred(v: Any): Option[Double] = v match {
-      case n: Byte => Some((n - 1).toDouble)
-      case n: Short => Some((n - 1).toDouble)
-      case n: Int => Some((n - 1L).toDouble)
-      case n: Long if n - 1 > -(1L << 53) && n < (1L << 53) => Some((n - 1).toDouble)
-      case n: Float => Some(math.nextDown(n).toDouble)
-      case n: Double => Some(math.nextDown(n))
-      case _ => None
-    }
-    f match {
-      case EqualTo(a, v: String) => Some(Pred.StrEq(a, v))
-      case EqualTo(a, v) => exact(v).map(Pred.Eq(a, _))
-      case GreaterThanOrEqual(a, v) => exact(v).map(Pred.Between(a, _, Inf))
-      case LessThanOrEqual(a, v) => exact(v).map(Pred.Between(a, -Inf, _))
-      case GreaterThan(a, v) => succ(v).map(Pred.Between(a, _, Inf))
-      case LessThan(a, v) => pred(v).map(Pred.Between(a, -Inf, _))
-      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        Some(Pred.StrIn(a, vs.toSeq.map(_.asInstanceOf[String])))
-      case In(a, vs) if vs.nonEmpty =>
-        val ps = vs.toSeq.map(exact)
-        if (ps.exists(_.isEmpty)) None else Some(Pred.In(a, ps.map(_.get)))
-      case IsNull(a) => Some(Pred.IsNull(a)) // row-exact by definition
-      case IsNotNull(a) => Some(Pred.NotNull(a))
-      case And(l, r) => for { a <- toExactPred(l); b <- toExactPred(r) } yield Pred.And(a, b)
-      case Or(l, r) => for { a <- toExactPred(l); b <- toExactPred(r) } yield Pred.Or(a, b)
-      case _ => None
-    }
   }
 
   def toPred(f: Filter): Option[Pred] = f match {

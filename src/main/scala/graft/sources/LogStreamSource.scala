@@ -173,12 +173,20 @@ object LogStreamSource {
     if (p != null && p.startsWith("file:")) new java.net.URI(p).getPath else p
 }
 
+/** A graft-log table as Spark's catalog sees it: batch and streaming
+  * reads (`LogScanBuilder`, pinned by `asOfVersion` for time travel),
+  * batch writes, and row-level DML. Every `DELETE FROM t WHERE ...`,
+  * `UPDATE` and `MERGE INTO` plans as a delta-based row-level operation
+  * (`LogRowLevelOperation`): the scan names the killed rows by
+  * `(_graft_rel, _graft_pos)` and `SnapshotLog.commitDelta` lands them
+  * as deletion vectors, zero data files rewritten. A bare
+  * `DELETE FROM t` plans as a truncate. */
 final class LogStreamTable(table: String, schema: StructType,
                            partitionBy: Seq[String] = Seq.empty,
                            asOfVersion: Option[Long] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete
+    with org.apache.spark.sql.connector.catalog.TruncatableTable
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
 
@@ -206,45 +214,8 @@ final class LogStreamTable(table: String, schema: StructType,
     () => new LogRowLevelOperation(table, schema, info.command())
   }
 
-  /** SQL `DELETE FROM t WHERE ...` — merge-on-read: matching rows die
-    * by deletion-vector sidecars (`SnapshotLog.deleteWhere`), zero
-    * data files rewritten. Only ROW-EXACT predicate translations are
-    * accepted (`LogFilters.toExactPred` — no timestamps/decimals/
-    * nulls); anything else makes `canDeleteWhere` false and Spark
-    * reports the delete unsupported rather than deleting wrong rows.
-    * A bare `DELETE FROM t` / `TRUNCATE` is a replace commit with no
-    * files — history stays time-travelable. */
-  private def exactPreds(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Option[Seq[graft.core.SnapshotLog.Pred]] = {
-    // a bare DELETE FROM t arrives as AlwaysTrue (truncate); an
-    // optimizer-proven-empty delete as AlwaysFalse (no-op)
-    val ps = filters.toSeq
-      .filterNot(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue])
-      .map(LogFilters.toExactPred)
-    if (ps.exists(_.isEmpty)) None else Some(ps.flatten)
-  }
-
-  override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    asOfVersion.isEmpty &&
-      (filters.exists(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysFalse]) ||
-        exactPreds(filters).isDefined)
-
-  override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    require(asOfVersion.isEmpty, s"cannot delete from $name — it is a time-travel snapshot")
-    if (filters.exists(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysFalse]))
-      return // provably-empty predicate: nothing to delete
-    val spark = org.apache.spark.sql.SparkSession.active
-    val ps = exactPreds(filters).getOrElse(
-      sys.error(s"graft-log: predicate not row-exact for DELETE: ${filters.mkString(", ")}"))
-    if (ps.isEmpty) truncateTable() // DELETE FROM t with no WHERE
-    else {
-      val p = if (ps.size == 1) ps.head
-        else graft.core.SnapshotLog.Pred.And(ps: _*)
-      SnapshotLog.deleteWhere(spark, table, p)
-    }
-    ()
-  }
-
+  /** `TRUNCATE TABLE t` and a bare `DELETE FROM t`: a zero-row replace
+    * commit — history stays time-travelable. */
   override def truncateTable(): Boolean = {
     require(asOfVersion.isEmpty, s"cannot truncate $name — it is a time-travel snapshot")
     val spark = org.apache.spark.sql.SparkSession.active

@@ -49,6 +49,18 @@ class SessionSurfaceSpec extends AnyFunSuite with SparkFixture {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("the SQL DELETE fork and the barrier debug knob stay deleted from src/main") {
+    // every SQL DELETE is a row-level delta landing through commitDelta;
+    // there is no metadata-delete fork, and barriers log through nothing
+    val banned = Seq("GRAFT_BARRIER_DEBUG", "SupportsDelete", "canDeleteWhere", "toExactPred")
+    val main = srcRoot.resolve("main")
+    val hits = for {
+      (p, text) <- sources if p.startsWith(main)
+      w <- banned if text.contains(w)
+    } yield s"${srcRoot.relativize(p)}: $w"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("the factory's session carries the engine settings") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000")

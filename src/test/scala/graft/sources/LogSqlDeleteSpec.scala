@@ -1,16 +1,19 @@
 package graft.sources
 
 import java.nio.file.Files
+import org.apache.spark.sql.catalyst.plans.logical.CommandResult
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 import graft.core.SnapshotLog
 
-/** SQL `DELETE FROM` on graft-log tables (`SupportsDelete`):
-  * merge-on-read semantics — matching rows die via deletion-vector
-  * sidecars with zero data-file rewrites; only row-exact predicate
-  * translations are accepted; bare DELETE truncates as an empty
-  * replace commit with history intact. */
+/** SQL `DELETE FROM` on graft-log tables: every predicate plans as a
+  * delta-based row-level operation (`WriteDelta`) whose pinned scan
+  * prunes files by the predicate, and lands through
+  * `SnapshotLog.commitDelta` — matching rows die via deletion-vector
+  * sidecars with zero data-file rewrites. A bare `DELETE FROM t` and
+  * `TRUNCATE TABLE t` plan as a truncate: a zero-row replace commit
+  * with history intact. */
 class LogSqlDeleteSpec extends AnyFunSuite with SparkFixture {
 
   private def freshTable(): String = {
@@ -27,47 +30,66 @@ class LogSqlDeleteSpec extends AnyFunSuite with SparkFixture {
   private def register(t: String, name: String): Unit =
     spark.sql(s"CREATE TABLE $name USING `graft-log` OPTIONS (path '$t')")
 
+  private def count(name: String): Long =
+    spark.sql(s"SELECT count(*) AS n FROM $name").collect().head.getLong(0)
+
+  /** Run a SQL command; (analyzed logical, physical) plan trees. */
+  private def runPlans(sqlText: String): (String, String) =
+    spark.sql(sqlText).queryExecution.commandExecuted match {
+      case c: CommandResult =>
+        (c.commandLogicalPlan.treeString, c.commandPhysicalPlan.treeString)
+      case other => fail(s"not a command: $other")
+    }
+
   test("DELETE FROM ... WHERE lands deletion vectors, no file rewrites") {
     val t = freshTable()
     register(t, "sqldel_t")
     try {
       val beforeFiles = SnapshotLog.resolve(t, 1L).entries.map(_.path).toSet
       spark.sql("DELETE FROM sqldel_t WHERE id >= 10 AND id < 30")
-      assert(spark.sql("SELECT count(*) AS n FROM sqldel_t")
-        .collect().head.getLong(0) == 80L)
+      assert(count("sqldel_t") == 80L)
       assert(spark.sql("SELECT min(id) AS lo FROM sqldel_t WHERE id >= 5")
         .collect().head.getLong(0) == 5L)
       val head = SnapshotLog.resolve(t, SnapshotLog.versions(t).last)
       assert(head.entries.map(_.path).toSet == beforeFiles,
         "merge-on-read delete must not rewrite data files")
       assert(head.entries.exists(_.dv.isDefined), "matching entries must carry vectors")
-      // string + OR predicates translate exactly too
+      // string + OR predicates
       spark.sql("DELETE FROM sqldel_t WHERE par = 'odd' OR id = 0")
-      assert(spark.sql("SELECT count(*) AS n FROM sqldel_t")
-        .collect().head.getLong(0) == 39L) // evens 2..98 minus the 10 dead in [10,30)
+      assert(count("sqldel_t") == 39L) // evens 2..98 minus the 10 dead in [10,30)
     } finally spark.sql("DROP TABLE sqldel_t")
   }
 
-  test("a non-exact predicate is NEVER served from the metadata fast path") {
-    // payload LIKE has no exact Pred translation — canDeleteWhere must
-    // refuse so Spark routes it through the row-level REWRITE instead
-    // (LogRowLevelDmlSpec pins that path end-to-end); a fast path that
-    // accepted it would delete whole bound-ranges, not matching rows
+  test("a range DELETE plans WriteDelta with pushed pruning, never DeleteFromTable") {
     val t = freshTable()
-    val table = new LogStreamTable(t, SnapshotLog.read(spark, t).schema)
-    import org.apache.spark.sql.sources._
-    assert(!table.canDeleteWhere(Array[Filter](StringStartsWith("payload", "p1"))))
-    assert(!table.canDeleteWhere(Array[Filter](
-      EqualTo("id", java.sql.Timestamp.valueOf("2020-01-01 00:00:00")))))
-    assert(table.canDeleteWhere(Array[Filter](
-      And(GreaterThanOrEqual("id", 10L), LessThan("id", 30L)))))
-    assert(table.canDeleteWhere(Array[Filter](EqualTo("payload", "p1"))))
-    // and end-to-end: the LIKE delete still WORKS via the rewrite path
+    register(t, "sqldel_plan")
+    try {
+      val (logical, physical) = runPlans("DELETE FROM sqldel_plan WHERE id >= 10 AND id < 30")
+      assert(logical.contains("WriteDelta"), logical)
+      assert(!logical.contains("DeleteFromTable"), logical)
+      assert(physical.contains("WriteDelta"), physical)
+      assert(physical.contains("pruned=[") && !physical.contains("pruned=[]"),
+        s"the row-level scan must push the range into manifest pruning:\n$physical")
+      assert(count("sqldel_plan") == 80L)
+      // one rewrite commit re-listing only the files the range touches
+      val rec = SnapshotLog.readRecord(t, 2L)
+      assert(rec.kind == "rewrite" && rec.adds.forall(_.dv.isDefined))
+      assert(rec.adds.size < SnapshotLog.resolve(t, 1L).entries.size)
+      assert(rec.adds.map(_.dvRows).sum == 20L)
+    } finally spark.sql("DROP TABLE sqldel_plan")
+  }
+
+  test("a non-exact predicate deletes exactly its rows") {
+    // payload LIKE has no manifest translation: the row-level scan
+    // prunes nothing and the residual filter picks the rows
+    val t = freshTable()
     register(t, "sqldel_ne")
     try {
       spark.sql("DELETE FROM sqldel_ne WHERE payload LIKE 'p1%'") // p1, p10..p19
-      assert(spark.sql("SELECT count(*) AS n FROM sqldel_ne")
-        .collect().head.getLong(0) == 89L)
+      assert(count("sqldel_ne") == 89L)
+      // a pure delete adds no files, so its record names no schema (a
+      // write schema there would label re-listed schema-less entries)
+      assert(SnapshotLog.readRecord(t, 2L).schema.isEmpty)
     } finally spark.sql("DROP TABLE sqldel_ne")
   }
 
@@ -75,11 +97,28 @@ class LogSqlDeleteSpec extends AnyFunSuite with SparkFixture {
     val t = freshTable()
     register(t, "sqldel_tr")
     try {
-      spark.sql("DELETE FROM sqldel_tr")
-      assert(spark.sql("SELECT count(*) AS n FROM sqldel_tr")
-        .collect().head.getLong(0) == 0L)
+      // a bare DELETE plans as a truncate, not a row-level delta
+      val (_, physical) = runPlans("DELETE FROM sqldel_tr")
+      assert(physical.contains("TruncateTable"), physical)
+      assert(!physical.contains("WriteDelta"), physical)
+      assert(count("sqldel_tr") == 0L)
       assert(SnapshotLog.read(spark, t, asOf = Some(1L)).count() == 100L,
         "pre-truncate snapshot must stay readable")
     } finally spark.sql("DROP TABLE sqldel_tr")
+  }
+
+  test("TRUNCATE TABLE is one zero-row replace commit; v1 still time-travels") {
+    val t = freshTable()
+    register(t, "sqldel_trunc")
+    try {
+      spark.sql("TRUNCATE TABLE sqldel_trunc")
+      assert(SnapshotLog.versions(t).last == 2L)
+      val rec = SnapshotLog.readRecord(t, 2L)
+      assert(rec.kind == "replace" && rec.rows == 0L && rec.removes.isEmpty, rec)
+      assert(SnapshotLog.resolve(t, 2L).entries.map(_.rows).sum == 0L)
+      assert(count("sqldel_trunc") == 0L)
+      assert(SnapshotLog.read(spark, t, asOf = Some(1L)).count() == 100L,
+        "pre-truncate snapshot must stay readable")
+    } finally spark.sql("DROP TABLE sqldel_trunc")
   }
 }
