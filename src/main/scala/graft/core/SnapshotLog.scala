@@ -21,12 +21,12 @@ import org.apache.spark.sql.functions._
   *    writers without locks).
   *  - **Commits are atomic and conditional.** A writer stages its
   *    files under `data/<uuid>/` (invisible — nothing references
-  *    them), serializes the commit record to a temp name, then
-  *    publishes with CREATE-NEW semantics (hard-link, which fails
-  *    atomically if v{N} already exists). Losing a race means
-  *    re-reading the new head and retrying at N+1 — optimistic
-  *    concurrency, no coordinator. Readers see v{N-1} or v{N}, never
-  *    a torn state.
+  *    them), then `publish` hard-links the record as v{N} (CREATE-NEW:
+  *    the link fails atomically if v{N} already exists). A lost race
+  *    judges each winner by the loser's row of the conflict table
+  *    (`conflicts`): re-link at the new head or fail loudly —
+  *    optimistic concurrency, no coordinator. Readers see v{N-1} or
+  *    v{N}, never a torn state.
   *  - **Commit records are DELTAS; checkpoints bound replay.** An
   *    append record lists only the files IT added (with their row
   *    counts and column bounds), so a long streaming-ingest chain
@@ -359,11 +359,11 @@ object SnapshotLog {
     * head-resolution audits (each record read bumps it once). */
   private[core] val recordReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Race-injection seam for specs: runs inside `commit` after the txn
-    * pre-check, before the stage write — the window where a concurrent
-    * duplicate of the same (appId, batchId) can land. No-op in
-    * production. */
-  @volatile private[core] var onStagedHook: () => Unit = () => ()
+  /** Step seam for specs: `publish` calls it at "staged" (record in
+    * its tmp file, before the first link), "linked" (before the
+    * checkpoint) and "checkpointed" (checkpoint in its tmp file, before
+    * that links); a throw there fails that step. No-op in production. */
+  @volatile private[core] var onStep: String => Unit = _ => ()
 
   /** IN-COMMIT TIMESTAMP for the record about to publish at `v`
     * (Delta's inCommitTimestamps): the commit instant is DATA, not a
@@ -537,9 +537,11 @@ object SnapshotLog {
     * identical by construction, so losing is a silent no-op). */
   private def writeCheckpoint(table: String, st: TableState): Unit = {
     val tmp = logDir(table).resolve(s".ckpt-tmp-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, stateToJson(st).getBytes("UTF-8"))
-    try Files.createLink(ckptPath(table, st.version), tmp)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
+    try {
+      Files.write(tmp, stateToJson(st).getBytes("UTF-8"))
+      onStep("checkpointed")
+      Files.createLink(ckptPath(table, st.version), tmp)
+    } catch { case _: java.nio.file.FileAlreadyExistsException => () }
     finally Files.deleteIfExists(tmp)
   }
 
@@ -662,6 +664,120 @@ object SnapshotLog {
     None
   }
 
+  /** The commit kinds a lost race is judged by — the rows of
+    * `conflicts`. `constraints` are the CHECK names the loser's staged
+    * rows were validated against. */
+  private sealed trait Loser
+  private object Loser {
+    final case class Blind(txn: Option[(String, Long)], constraints: Set[String]) extends Loser
+    final case class Rewrite(removes: Set[String], constraints: Set[String]) extends Loser
+    case object Conditional extends Loser
+    case object Restore extends Loser
+    case object Properties extends Loser
+    case object AddConstraint extends Loser
+    case object SchemaChange extends Loser
+    case object Clone extends Loser
+  }
+
+  /** THE CONFLICT TABLE — Delta's conflict checker (Armbrust et al.,
+    * VLDB 2020) as data. A lost race judges each winner `w` after the
+    * loser's `base`, the version it derived its record from; Left(msg)
+    * fails the loser, Right(v) returns v instead:
+    * {{{
+    * loser (base)                       w conflicts when it...       fails with "concurrent ..."
+    * Blind commit (head resolved)       adds a CHECK constraint      ADD CONSTRAINT
+    *                                    (applied the loser's txn: return w's version instead)
+    * Conditional commit (expectedHead)  is any winner                modification
+    * Rewrite, commitDelta (expected)    replaces, removes a file the modification
+    *                                    loser removes, adds a CHECK
+    * Restore (head)                     is any winner                modification
+    * Properties, DROP CONSTRAINT (head) has props, colmap, dropped   property/schema change
+    * AddConstraint (validated v)        as Properties; adds/removes  property/schema change;
+    *                                    data                         modification
+    * SchemaChange: RENAME/DROP (head)   has colmap, dropped, props   schema change
+    * Clone (0)                          is any winner                "already has a v1 commit"
+    * }}}
+    * No conflict: the record re-links verbatim, as if serialized after
+    * the winners. `props`/`colmap` replace the whole value, so metadata
+    * derived at `base` is stale once a winner changed any. Like Delta's
+    * WriteSerializable, two rewrites that both INSERT one brand-new key
+    * both land: neither removed a file the other touched. */
+  private def conflicts(table: String, base: Long, loser: Loser,
+                        w: CommitRecord): Option[Either[String, Long]] = {
+    def fail(what: String) = Some(Left(s"concurrent $what on $table: " +
+      s"v${w.version} (${w.kind}) landed past v$base; re-derive and retry"))
+    val added = w.props.toSeq.flatMap(Constraints.of).map(_._1)
+    val metadata = w.props.isDefined || w.colmap.isDefined || w.dropped.isDefined
+    val replace = w.removes.isEmpty && !w.append
+    loser match {
+      case Loser.Blind(txn, known) =>
+        if (txn.exists { case (app, b) => w.txn.exists(t => t._1 == app && t._2 >= b) })
+          Some(Right(w.version))
+        else if (added.exists(!known(_))) Some(Left(
+          s"concurrent ADD CONSTRAINT on $table (${added.filterNot(known).mkString(", ")}) " +
+            "landed while this write was staging — its rows were not " +
+            "validated against the new constraint; re-run the write"))
+        else None
+      case Loser.Rewrite(removes, known) =>
+        if (replace || w.removes.exists(removes) || added.exists(!known(_))) fail("modification")
+        else None
+      case Loser.Conditional | Loser.Restore => fail("modification")
+      case Loser.Properties => if (metadata) fail("property/schema change") else None
+      case Loser.AddConstraint =>
+        if (metadata) fail("property/schema change")
+        else if (replace || w.adds.nonEmpty || w.removes.nonEmpty) fail("modification")
+        else None
+      case Loser.SchemaChange => if (metadata) fail("schema change") else None
+      case Loser.Clone =>
+        Some(Left(s"clone target $table already has a v1 commit — clone needs a fresh directory"))
+    }
+  }
+
+  private val publishAttempts = 20 // lost link races one publish rides out
+
+  /** THE one way a version lands: `record(v)` (its in-commit timestamp
+    * stamped here) links at base+1, so any winner since `base` — during
+    * a long stage write too — is judged by the loser's row of
+    * `conflicts`; absent an outcome the record re-links at head+1. The
+    * tmp record dies on every path; the checkpoint is best effort after
+    * the link (a landed version never raises for it — resolve replays
+    * the records). */
+  private def publish(table: String, base: Long, loser: Loser)(
+      record: Long => CommitRecord): Long = {
+    Files.createDirectories(logDir(table))
+    val tmp = logDir(table).resolve(s".tmp-${java.util.UUID.randomUUID()}")
+    var v = base + 1
+    var attempt = 0
+    try {
+      var linked = false
+      while (!linked) {
+        Files.write(tmp,
+          recordToJson(record(v).copy(ts = commitTs(table, v))).getBytes("UTF-8"))
+        if (attempt == 0) onStep("staged")
+        try { Files.createLink(vPath(table, v), tmp); linked = true } // atomic create-new
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            val head = latestVersion(table).getOrElse(v)
+            val outcomes =
+              (v to head).flatMap(n => conflicts(table, base, loser, readRecord(table, n)))
+            outcomes.collectFirst { case Right(n) => n } match {
+              case Some(n) => return n
+              case None => outcomes.collectFirst { case Left(m) => m }.foreach(sys.error)
+            }
+            attempt += 1
+            if (attempt >= publishAttempts)
+              sys.error(s"commit contention on $table: lost $attempt publish races")
+            v = head + 1
+        }
+      }
+    } finally Files.deleteIfExists(tmp)
+    onStep("linked")
+    if (v % checkpointEvery == 0)
+      try writeCheckpoint(table, resolve(table, v))
+      catch { case scala.util.control.NonFatal(_) => () }
+    v
+  }
+
   /** Stage `df` as immutable data files and commit them as the next
     * version. `append=false` replaces the table's content; `append=true`
     * extends the previous version's file list. `partitionBy` stages a
@@ -685,34 +801,32 @@ object SnapshotLog {
     * version — Delta's txnAppId/txnVersion rule, what makes
     * foreachBatch ingest exactly-once across micro-batch replays.
     *
-    * Concurrency-safe via create-new record publish + retry (bounded;
-    * each retry re-reads the head, so an append never drops a racer's
-    * files). `expectedHead` turns the commit into a conditional
-    * read-modify-write (merge/compact): it fails loudly if the head
-    * moved, instead of silently erasing the racer's rows. */
+    * A BLIND write (conflict table row `Blind`) re-links past racers —
+    * an append never drops a racer's files. `expectedHead` turns it
+    * into a conditional read-modify-write (merge/compact, row
+    * `Conditional`): it fails loudly if the head moved, instead of
+    * silently erasing the racer's rows. */
   def commit(spark: SparkSession, df: DataFrame, table: String,
              append: Boolean = false, partitionBy: Seq[String] = Seq.empty,
              statsFor: Seq[String] = Seq.empty,
              expectedHead: Option[Long] = None,
              txn: Option[(String, Long)] = None,
              dataChange: Boolean = true,
-             maxRetries: Int = 20,
              props: Option[Map[String, String]] = None): Long = {
-    Files.createDirectories(logDir(table))
-    def alreadyApplied(): Option[Long] = txn.flatMap { case (app, batch) =>
-      resolveHead(table).filter(_.txns.get(app).exists(_ >= batch)).map(_.version)
-    }
     // ONE head resolution serves the txn replay check, the carried
     // stats columns, AND the column mapping (writes must stage under
     // PHYSICAL names) — the ingest hot path pays the
     // O(checkpoint-interval) metadata replay once per commit
     val headState: Option[TableState] = resolveHead(table)
+    val headV = headState.fold(0L)(_.version)
     val replayed = txn.flatMap { case (app, batch) => // replayed batch:
       // skip even the stage write
       headState.filter(_.txns.get(app).exists(_ >= batch)).map(_.version)
     }
     if (replayed.isDefined) return replayed.get
-    onStagedHook()
+    expectedHead.foreach(e => if (e != headV) sys.error(
+      s"concurrent modification on $table: head moved v$e -> v$headV " +
+        "under a read-modify-write commit; re-derive and retry"))
     // indexed columns: the explicit ask plus (on append) whatever the
     // head already indexes, best-effort — an appended file missing a
     // head column simply records no bounds for it (always read)
@@ -746,62 +860,15 @@ object SnapshotLog {
     // type (or widen exactly) or the read-side union fails later
     if (append) headState.foreach(s =>
       requireWriteCompatible(table, dfPhys.schema, s.entries))
-    val (stage, adds) =
+    val (_, adds) =
       stageEntries(spark, dfPhys, table, partByPhys,
         (statsPhys ++ carryCols).distinct, bloom = bloom, checks = checks)
-    var attempt = 0
-    while (true) {
-      val cur = latestVersion(table).getOrElse(0L)
-      expectedHead.foreach(e => if (cur != e) sys.error(
-        s"concurrent modification on $table: head moved v$e -> v$cur " +
-          "under a read-modify-write commit; re-derive and retry"))
-      // a racer may have applied our txn ANY time after the one head
-      // resolution above — during the (long) stage write included. A
-      // lost link race retries through here, but a racer that landed
-      // BEFORE our first link attempt never causes one, so gate on the
-      // head having MOVED since the version the txn was checked at,
-      // not on attempt count — otherwise a zombie replay that commits
-      // while we stage double-appends on a clean first link.
-      if (txn.isDefined && !headState.map(_.version).contains(cur)) {
-        val raced = alreadyApplied()
-        if (raced.isDefined) return raced.get
-      }
-      // a CHECK constraint that landed after this write derived its
-      // checks (any time from head resolution through retries) means
-      // the staged rows were never validated against it: fail loudly
-      // instead of publishing unvalidated rows into a constrained table
-      if (!headState.map(_.version).contains(cur)) {
-        val known = Constraints.of(effProps).map(_._1).toSet
-        ((headState.map(_.version).getOrElse(0L) + 1L) to cur)
-          .map(readRecord(table, _)).flatMap(_.props).foreach { ps =>
-            val added = Constraints.of(ps).filterNot(c => known(c._1))
-            if (added.nonEmpty) sys.error(
-              s"concurrent ADD CONSTRAINT on $table (${added.map(_._1).mkString(", ")}) " +
-                "landed while this write was staging — its rows were not " +
-                "validated against the new constraint; re-run the write")
-          }
-      }
-      val v = cur + 1
-      val rec = CommitRecord(v, append && v > 1, adds, txn,
-        schema = if (adds.isEmpty) None else Some(dfPhys.schema.json),
-        dataChange = dataChange, props = props, ts = commitTs(table, v))
-      val tmp = logDir(table).resolve(s".tmp-$stage-$attempt")
-      Files.write(tmp, recordToJson(rec).getBytes("UTF-8"))
-      try {
-        Files.createLink(vPath(table, v), tmp) // atomic create-new
-        Files.delete(tmp)
-        if (v % checkpointEvery == 0) writeCheckpoint(table, resolve(table, v))
-        return v
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.delete(tmp) // lost the race: re-read head, retry at v+1
-          // (the retry re-runs the constraint-race check above on the
-          // winners it finds)
-          attempt += 1
-          if (attempt > maxRetries) sys.error(s"commit contention on $table")
-      }
-    }
-    -1L // unreachable
+    val loser =
+      if (expectedHead.isDefined) Loser.Conditional
+      else Loser.Blind(txn, checks.map(_._1).toSet)
+    publish(table, headV, loser)(v => CommitRecord(v, append && v > 1, adds, txn,
+      schema = if (adds.isEmpty) None else Some(dfPhys.schema.json),
+      dataChange = dataChange, props = props))
   }
 
   /** Stage `df` as immutable parquet files under `<table>/<root>/
@@ -1019,17 +1086,16 @@ object SnapshotLog {
     * `readChangeFeed` deliver an incremental delta ACROSS a merge
     * instead of walling off every downstream consumer.
     *
-    * Conditional by construction: a rewrite derived from version N is
-    * valid only against N, so the publish is create-new at N+1 and a
-    * lost race is a loud error (re-derive and retry), never a retry
-    * that silently erases the racer. */
+    * Publishes from `expectedHead` (conflict table row `Rewrite`): past
+    * LOGICALLY DISJOINT winners the staged rewrite re-links without
+    * re-running; an overlapping winner fails it loudly (re-derive and
+    * retry), never a retry that silently erases the racer. */
   def commitRewrite(spark: SparkSession, df: DataFrame, table: String,
                     removePaths: Seq[String], expectedHead: Long,
                     statsFor: Seq[String] = Seq.empty,
                     changeData: Option[DataFrame] = None,
                     dataChange: Boolean = true,
                     partitionBy: Seq[String] = Seq.empty): Long = {
-    Files.createDirectories(logDir(table))
     val prev = resolve(table, expectedHead)
     val prevPaths = prev.entries.map(_.path).toSet
     val missing = removePaths.filterNot(prevPaths)
@@ -1060,84 +1126,11 @@ object SnapshotLog {
     }
     require(dataChange || changeData.isEmpty,
       "a maintenance rewrite (dataChange=false) has no change data by definition")
-    publishRewrite(table, removePaths, adds,
-      recordSchema = if (adds.isEmpty) None else Some(df.schema.json),
-      cdcEntries = cdcEntries, cdcSchema = cdcSchema,
-      expectedHead = expectedHead, dataChange = dataChange)
-  }
-
-  /** Publish a rewrite record with explicit entries (shared by
-    * `commitRewrite`, which staged a DataFrame, and `commitDelta`,
-    * which re-lists existing entries with deletion vectors attached).
-    * Conditional create-new at expectedHead+1.
-    *
-    * CONFLICT-AWARE retry (Delta's logical conflict check under
-    * WriteSerializable): a lost publish race does NOT force the
-    * caller to re-run the whole rewrite when every intervening winner
-    * is LOGICALLY DISJOINT — i.e. no winner was a full replace and no
-    * winner removed any file THIS rewrite read/removed. Then the
-    * staged files are still the correct replacement for exactly the
-    * files they replace, and the record re-publishes verbatim at the
-    * new head: the result equals the serial order (winners first,
-    * this rewrite last) — winner appends survive because this record
-    * only removes its own file set, and winner rewrites touched other
-    * files by construction. A winner that DID touch an overlapping
-    * file (or replaced the table) makes the staged output stale, and
-    * the publish fails loudly so the caller re-derives — never a
-    * silent lost update. (Like Delta's WriteSerializable, two racing
-    * merges that both INSERT the same brand-new key can both land —
-    * neither read the other's files; key-level uniqueness across
-    * concurrent writers needs the serializable single-lane pattern.) */
-  private def publishRewrite(table: String, removePaths: Seq[String],
-                             adds: Seq[FileEntry], recordSchema: Option[String],
-                             cdcEntries: Seq[FileEntry], cdcSchema: Option[String],
-                             expectedHead: Long, dataChange: Boolean,
-                             fullReplace: Boolean = false): Long = {
-    onStagedHook()
-    val ourRemoves = removePaths.toSet
-    var head = expectedHead
-    var attempt = 0
-    // the constraints this rewrite's staged rows WERE validated under
-    // (a racing winner introducing a new one is a conflict)
-    lazy val knownConstraints =
-      Constraints.of(resolve(table, expectedHead).props).map(_._1).toSet
-    while (true) {
-      val v = head + 1
-      val rec = CommitRecord(v, append = removePaths.isEmpty && !fullReplace, adds,
-        schema = recordSchema,
+    publish(table, expectedHead, Loser.Rewrite(removePaths.toSet, checks.map(_._1).toSet))(
+      v => CommitRecord(v, append = removePaths.isEmpty, adds,
+        schema = if (adds.isEmpty) None else Some(df.schema.json),
         removes = removePaths, cdc = cdcEntries, cdcSchema = cdcSchema,
-        dataChange = dataChange, ts = commitTs(table, v))
-      val tmp = logDir(table).resolve(s".tmp-rw-${java.util.UUID.randomUUID()}")
-      Files.write(tmp, recordToJson(rec).getBytes("UTF-8"))
-      try {
-        Files.createLink(vPath(table, v), tmp) // atomic create-new
-        if (v % checkpointEvery == 0) writeCheckpoint(table, resolve(table, v))
-        return v
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val newHead = latestVersion(table).getOrElse(head)
-          val winners = ((head + 1) to newHead).map(readRecord(table, _))
-          val disjoint = !fullReplace && winners.forall { w =>
-            // any no-removes non-append winner REDEFINED the table —
-            // including a zero-adds replace (truncate / overwrite of
-            // an empty frame): re-publishing our stale file list over
-            // it would resurrect the rows it erased. A winner that
-            // ADDED CHECK constraints also conflicts: this rewrite's
-            // staged rows were validated against the pre-winner
-            // property map
-            val wReplace = w.removes.isEmpty && !w.append
-            val wNewConstraint = w.props.exists(ps =>
-              Constraints.of(ps).exists(c => !knownConstraints(c._1)))
-            !wReplace && !wNewConstraint && !w.removes.exists(ourRemoves.contains)
-          }
-          if (!disjoint || attempt >= 20) sys.error(
-            s"concurrent modification on $table: head moved past v$expectedHead " +
-              "under a rewrite commit; re-derive and retry")
-          attempt += 1
-          head = newHead
-      } finally Files.deleteIfExists(tmp)
-    }
-    -1L // unreachable
+        dataChange = dataChange))
   }
 
   /** RESTORE TABLE TO VERSION (Delta's RESTORE): make the head's
@@ -1149,7 +1142,7 @@ object SnapshotLog {
     * restored content, which is the roll-back a botched publish
     * needs. The restore is a full content redefinition, so it is a
     * replace commit — change-feed consumers resync, exactly as they
-    * must after a reset. */
+    * must after a reset. Any racing winner fails it (row `Restore`). */
   def restore(spark: SparkSession, table: String, toVersion: Long): Long = {
     val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
     if (toVersion == headV) return headV
@@ -1162,9 +1155,7 @@ object SnapshotLog {
     if (missing.nonEmpty) sys.error(
       s"cannot restore $table to v$toVersion: ${missing.size} of its data files " +
         s"were vacuumed (first: ${missing.head.path})")
-    publishRewrite(table, removePaths = Seq.empty, adds = target.entries,
-      recordSchema = None, cdcEntries = Seq.empty, cdcSchema = None,
-      expectedHead = headV, dataChange = true, fullReplace = true)
+    publish(table, headV, Loser.Restore)(v => CommitRecord(v, append = false, target.entries))
   }
 
   /** SHALLOW CLONE (Delta's CLONE): define `dst` as a NEW table whose
@@ -1185,7 +1176,8 @@ object SnapshotLog {
     * (the promote-to-owned path). Vacuum of the CLONE never touches
     * based data or absolute sidecars (it does not own them); vacuum of
     * the SOURCE can retire files clones still reference — Delta's
-    * documented shallow-clone caveat, by design. */
+    * documented shallow-clone caveat, by design. Any existing v1 fails
+    * the clone (conflict table row `Clone`). */
   def cloneTable(src: String, dst: String): Long = {
     val headV = latestVersion(src).getOrElse(
       sys.error(s"no committed version in $src"))
@@ -1204,21 +1196,11 @@ object SnapshotLog {
     val schemaJson = st.entries.flatMap(_.schema).headOption
       .orElse(versions(src).reverse.view
         .flatMap(v => readRecord(src, v).schema).headOption)
-    Files.createDirectories(logDir(dst))
-    val rec = CommitRecord(1L, append = false, adds = entries,
+    publish(dst, 0L, Loser.Clone)(v => CommitRecord(v, append = false, adds = entries,
       schema = schemaJson,
       colmap = if (st.colmap.nonEmpty) Some(st.colmap) else None,
       dropped = if (st.dropped.nonEmpty) Some(st.dropped) else None,
-      props = if (st.props.nonEmpty) Some(st.props) else None,
-      ts = commitTs(dst, 1L))
-    val tmp = logDir(dst).resolve(s".tmp-clone-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, recordToJson(rec).getBytes("UTF-8"))
-    try Files.createLink(vPath(dst, 1L), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => sys.error(
-        s"clone target $dst already has a v1 commit — clone needs a fresh directory")
-    } finally Files.deleteIfExists(tmp)
-    1L
+      props = if (st.props.nonEmpty) Some(st.props) else None))
   }
 
   // ------------------------------------------------------- column mapping
@@ -1269,7 +1251,9 @@ object SnapshotLog {
     * stays what the first commit wrote, and the new logical name is an
     * indirection in the log. Old snapshots keep reading under their
     * own (old) names, skipping stats stay valid (they key by physical
-    * name), and writes translate logical -> physical on staging. */
+    * name), and writes translate logical -> physical on staging. The
+    * mapping and property map derive from the head, so a racing schema
+    * or property change fails it (conflict table row `SchemaChange`). */
   def renameColumn(spark: SparkSession, table: String,
                    oldName: String, newName: String): Long = {
     require(oldName != newName, "rename to the same name is a no-op")
@@ -1294,7 +1278,9 @@ object SnapshotLog {
       .filter(_ => st.props.contains(BloomIndex.ColumnsProp))
       .map(v => st.props + (BloomIndex.ColumnsProp -> v))
       .filterNot(_ == st.props)
-    publishSchemaChange(table, headV, newMap, st.dropped, props = newProps)
+    publish(table, headV, Loser.SchemaChange)(v => CommitRecord(v, append = true,
+      adds = Seq.empty, dataChange = false,
+      colmap = Some(newMap), dropped = Some(st.dropped), props = newProps))
   }
 
   /** `ALTER TABLE ... DROP COLUMN` via column mapping: metadata-only —
@@ -1315,9 +1301,10 @@ object SnapshotLog {
       if (kept.isEmpty) st.props - BloomIndex.ColumnsProp
       else st.props + (BloomIndex.ColumnsProp -> kept.mkString(","))
     }.filterNot(_ == st.props)
-    publishSchemaChange(table, headV,
-      st.colmap.filterNot(_._1 == name), (st.dropped :+ phys).distinct,
-      props = newProps)
+    publish(table, headV, Loser.SchemaChange)(v => CommitRecord(v, append = true,
+      adds = Seq.empty, dataChange = false,
+      colmap = Some(st.colmap.filterNot(_._1 == name)),
+      dropped = Some((st.dropped :+ phys).distinct), props = newProps))
   }
 
   /** Refuse RENAME/DROP of a column a CHECK constraint references —
@@ -1338,41 +1325,16 @@ object SnapshotLog {
     * the bloom index (`graft.bloom.columns`) — so the change affects
     * FUTURE commits; existing files keep whatever indexes they have.
     * Validates bloom config eagerly (a typo'd fpp should fail the
-    * ALTER, not the next write). Retries past racing DATA commits
-    * (the new map derives only from the head's map); a racing
-    * property/schema change forces a re-derive. */
+    * ALTER, not the next write). Racing DATA commits re-link past; a
+    * racing property or schema change fails it (conflict table row
+    * `Properties`). */
   def setProperties(table: String, set: Map[String, String],
                     unset: Seq[String] = Seq.empty): Long = {
     val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
-    var head = headV
-    var attempt = 0
-    while (true) {
-      val st = resolve(table, head)
-      val newProps = (st.props ++ set) -- unset
-      BloomIndex.specOf(newProps) // validates fpp/items bounds, fails loudly
-      val rec = CommitRecord(head + 1, append = true, adds = Seq.empty,
-        dataChange = false, props = Some(newProps),
-        ts = commitTs(table, head + 1))
-      val tmp = logDir(table).resolve(s".tmp-pr-${java.util.UUID.randomUUID()}")
-      Files.write(tmp, recordToJson(rec).getBytes("UTF-8"))
-      try {
-        Files.createLink(vPath(table, head + 1), tmp)
-        if ((head + 1) % checkpointEvery == 0)
-          writeCheckpoint(table, resolve(table, head + 1))
-        return head + 1
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val newHead = latestVersion(table).getOrElse(head)
-          val winners = ((head + 1) to newHead).map(readRecord(table, _))
-          if (winners.exists(w => w.props.isDefined || w.colmap.isDefined) ||
-              attempt >= 20) sys.error(
-            s"concurrent property/schema change on $table: head moved past " +
-              s"v$head; re-derive and retry")
-          attempt += 1
-          head = newHead
-      } finally Files.deleteIfExists(tmp)
-    }
-    -1L // unreachable
+    val newProps = (resolve(table, headV).props ++ set) -- unset
+    BloomIndex.specOf(newProps) // validates fpp/items bounds, fails loudly
+    publish(table, headV, Loser.Properties)(v => CommitRecord(v, append = true,
+      adds = Seq.empty, dataChange = false, props = Some(newProps)))
   }
 
   /** Head property map (empty when never set). */
@@ -1383,14 +1345,18 @@ object SnapshotLog {
     * expression against EVERY live row first (one aggregate scan),
     * then publish the property — a constraint that lands is a
     * guarantee over the table's existing AND future content (future
-    * writes enforce it in their stats pass, pre-publish). */
+    * writes enforce it in their stats pass, pre-publish). It publishes
+    * from the version it validated (conflict table row `AddConstraint`):
+    * a racing data commit fails it, its rows were never checked. */
   def addConstraint(spark: SparkSession, table: String,
                     name: String, expr: String): Long = {
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name must be [A-Za-z0-9_]+, got '$name'")
-    require(!properties(table).contains(s"${Constraints.Prefix}$name"),
+    val v = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
+    val props = resolve(table, v).props
+    require(!props.contains(s"${Constraints.Prefix}$name"),
       s"constraint $name already exists on $table")
-    val df = read(spark, table) // LOGICAL view, the names the expr uses
+    val df = read(spark, table, Some(v)) // LOGICAL view, the names the expr uses
     // every referenced column must exist NOW: an unresolvable name
     // would evaluate as null forever — a constraint that silently
     // enforces nothing (Delta fails ADD CONSTRAINT the same way)
@@ -1404,48 +1370,14 @@ object SnapshotLog {
     if (viol > 0L) sys.error(
       s"cannot add CHECK constraint '$name' to $table: $viol existing " +
         s"row(s) violate ($expr)")
-    setProperties(table, Map(s"${Constraints.Prefix}$name" -> expr))
+    publish(table, v, Loser.AddConstraint)(n => CommitRecord(n, append = true,
+      adds = Seq.empty, dataChange = false,
+      props = Some(props + (s"${Constraints.Prefix}$name" -> expr))))
   }
 
   def dropConstraint(table: String, name: String): Long =
     setProperties(table, Map.empty,
       unset = Seq(s"${Constraints.Prefix}$name"))
-
-  /** Publish a schema-change (column mapping) commit: zero adds,
-    * dataChange=false (physical content identical), fmt 3. Retries
-    * past racing DATA commits (the mapping derives only from the
-    * head's mapping); a racing schema change forces a re-derive. */
-  private def publishSchemaChange(table: String, expectedHead: Long,
-                                  colmap: Seq[(String, String)],
-                                  dropped: Seq[String],
-                                  props: Option[Map[String, String]] = None): Long = {
-    var head = expectedHead
-    var attempt = 0
-    while (true) {
-      val v = head + 1
-      val rec = CommitRecord(v, append = true, adds = Seq.empty,
-        dataChange = false, colmap = Some(colmap), dropped = Some(dropped),
-        props = props, ts = commitTs(table, v))
-      val tmp = logDir(table).resolve(s".tmp-cm-${java.util.UUID.randomUUID()}")
-      Files.write(tmp, recordToJson(rec).getBytes("UTF-8"))
-      try {
-        Files.createLink(vPath(table, v), tmp)
-        if (v % checkpointEvery == 0) writeCheckpoint(table, resolve(table, v))
-        return v
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val newHead = latestVersion(table).getOrElse(head)
-          val winners = ((head + 1) to newHead).map(readRecord(table, _))
-          if (winners.exists(w => w.colmap.isDefined || w.dropped.isDefined) ||
-              attempt >= 20) sys.error(
-            s"concurrent schema change on $table: head moved past v$expectedHead; " +
-              "re-derive and retry")
-          attempt += 1
-          head = newHead
-      } finally Files.deleteIfExists(tmp)
-    }
-    -1L // unreachable
-  }
 
   /** MERGE-ON-READ DELETE (deletion vectors — Delta 3's shape): mark
     * every row matching `p` deleted by re-listing the affected entries
@@ -1493,9 +1425,10 @@ object SnapshotLog {
     * newest ⊇ older), staged inserts append, the change feed gets the
     * killed rows' PRE-IMAGES tagged `delete` plus the inserted rows
     * tagged `insert` (an update is its delete+insert pair), and the
-    * whole thing is CAS'd against `expectedHead` — the version the
-    * positions were read at, so a concurrent writer that touched the
-    * same files fails the disjoint check loudly instead of silently
+    * whole thing publishes from `expectedHead` — the version the
+    * positions were read at — as a rewrite of the affected entries
+    * (conflict table row `Rewrite`), so a concurrent writer that
+    * touched the same files fails it loudly instead of silently
     * resurrecting or double-killing rows. Zero data files are
     * rewritten (merge-on-read, Delta 3's DML shape). `posCounts` is
     * the dead rows per file — the commit plans with no counting job.
@@ -1584,10 +1517,11 @@ object SnapshotLog {
     val (_, cdcEntries) = stageEntries(spark, cdcDf, table, Seq.empty, Seq.empty, root = "cdc")
     // the record's schema describes the files it ADDS; a pure delete
     // adds none (re-listed entries keep their own schemas)
-    publishRewrite(table, affected.map(_.path), relisted ++ insertAdds,
-      recordSchema = insertSchemaJson.filter(_ => insertAdds.nonEmpty),
-      cdcEntries = cdcEntries, cdcSchema = Some(cdcDf.schema.json),
-      expectedHead = expectedHead, dataChange = true)
+    val removes = affected.map(_.path)
+    publish(table, expectedHead, Loser.Rewrite(removes.toSet, checks.map(_._1).toSet))(
+      v => CommitRecord(v, append = removes.isEmpty, relisted ++ insertAdds,
+        schema = insertSchemaJson.filter(_ => insertAdds.nonEmpty), removes = removes,
+        cdc = cdcEntries, cdcSchema = Some(cdcDf.schema.json)))
   }
 
   // ----------------------------------------------------------------- reads

@@ -61,6 +61,22 @@ class SessionSurfaceSpec extends AnyFunSuite with SparkFixture {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("graft-log versions land through one publish in src/main") {
+    // SnapshotLog.publish owns the record link, its retry and the
+    // checkpoint; the per-kind loops and the unused retry knob are gone
+    val main = srcRoot.resolve("main")
+    val mainSources = sources.filter(_._1.startsWith(main))
+    val links = mainSources.map { case (p, text) =>
+      srcRoot.relativize(p).toString -> """Files\.createLink\(vPath""".r.findAllIn(text).size
+    }.filter(_._2 > 0)
+    assert(links == Seq("main/scala/graft/core/SnapshotLog.scala" -> 1), s"record links: $links")
+    val hits = for {
+      (p, text) <- mainSources
+      w <- Seq("publishRewrite", "publishSchemaChange", "maxRetries") if text.contains(w)
+    } yield s"${srcRoot.relativize(p)}: $w"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("the factory's session carries the engine settings") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000")

@@ -173,9 +173,11 @@ class ConstraintsSpec extends AnyFunSuite with SparkFixture {
     // inject: the constraint lands AFTER this commit resolved the head
     // (no constraints) but BEFORE it publishes — the lost-CAS retry
     // must detect the new constraint and refuse
-    SnapshotLog.onStagedHook = () => {
-      SnapshotLog.addConstraint(spark, t, "pos_price", "price > 0")
-      SnapshotLog.onStagedHook = () => ()
+    SnapshotLog.onStep = {
+      case "staged" =>
+        SnapshotLog.onStep = _ => ()
+        SnapshotLog.addConstraint(spark, t, "pos_price", "price > 0"); ()
+      case _ => ()
     }
     try {
       val e = intercept[RuntimeException] {
@@ -184,7 +186,7 @@ class ConstraintsSpec extends AnyFunSuite with SparkFixture {
       }
       assert(e.getMessage.contains("concurrent ADD CONSTRAINT"), e.getMessage)
       assert(SnapshotLog.read(spark, t).filter(col("price") < 0).count() == 0L)
-    } finally SnapshotLog.onStagedHook = () => ()
+    } finally SnapshotLog.onStep = _ => ()
   }
 
   test("drop re-allows; SQL ALTER SET TBLPROPERTIES takes the validated ADD path") {

@@ -348,11 +348,13 @@ class SnapshotLogCowSpec extends AnyFunSuite with SparkFixture {
     try {
       // merge A (keys in file [0,19]) lands WHILE merge B (keys in
       // file [60,79]) is between staging and publish — the stage seam
-      // fires inside B's publishRewrite
-      SnapshotLog.onStagedHook = () => {
-        SnapshotLog.onStagedHook = () => () // fire once (A must not recurse)
-        SnapshotLog.merge(spark, t, Seq((10L, "A10")).toDF("id", "payload"), "id")
-        ()
+      // fires inside B's publish
+      SnapshotLog.onStep = {
+        case "staged" =>
+          SnapshotLog.onStep = _ => () // fire once (A must not recurse)
+          SnapshotLog.merge(spark, t, Seq((10L, "A10")).toDF("id", "payload"), "id")
+          ()
+        case _ => ()
       }
       val vB = SnapshotLog.merge(spark, t,
         Seq((70L, "B70")).toDF("id", "payload"), "id")
@@ -365,15 +367,17 @@ class SnapshotLogCowSpec extends AnyFunSuite with SparkFixture {
       // each merge staged exactly once: initial commit + A + B = 3
       // data stages; a re-executed rewrite would have left a 4th
       assert(dataStages() == 3, s"B must NOT re-run its rewrite, stages=${dataStages()}")
-    } finally SnapshotLog.onStagedHook = () => ()
+    } finally SnapshotLog.onStep = _ => ()
 
     // overlapping keys (same [0,19] file): the loser must re-derive
     val t2 = clusteredTable()
     try {
-      SnapshotLog.onStagedHook = () => {
-        SnapshotLog.onStagedHook = () => ()
-        SnapshotLog.merge(spark, t2, Seq((11L, "A11")).toDF("id", "payload"), "id")
-        ()
+      SnapshotLog.onStep = {
+        case "staged" =>
+          SnapshotLog.onStep = _ => ()
+          SnapshotLog.merge(spark, t2, Seq((11L, "A11")).toDF("id", "payload"), "id")
+          ()
+        case _ => ()
       }
       val e = intercept[RuntimeException] {
         SnapshotLog.merge(spark, t2, Seq((12L, "B12")).toDF("id", "payload"), "id")
@@ -383,23 +387,26 @@ class SnapshotLogCowSpec extends AnyFunSuite with SparkFixture {
       val rows2 = SnapshotLog.read(spark, t2).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(rows2(11L) == "A11" && rows2(12L) == "p12")
-    } finally SnapshotLog.onStagedHook = () => ()
+    } finally SnapshotLog.onStep = _ => ()
   }
 
   test("a racing truncate (zero-adds replace) forces the loser to re-derive") {
     import spark.implicits._
     val t = clusteredTable()
     try {
-      // the truncate stages NO files (empty frame), so its record is a
-      // replace with zero adds — it must still count as a table
-      // redefinition in the disjoint check, or the racing merge would
-      // re-publish its stale file list and resurrect the erased rows
-      SnapshotLog.onStagedHook = () => {
-        SnapshotLog.onStagedHook = () => ()
-        SnapshotLog.commit(spark,
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            SnapshotLog.read(spark, t).schema), t)
-        ()
+      // the truncate commits an empty frame: its record is a replace
+      // whose one add is a zero-row file (`commit` stages one even for
+      // an empty frame) — it must count as a table redefinition in the
+      // conflict check, or the racing merge would re-publish its stale
+      // file list and resurrect the erased rows
+      SnapshotLog.onStep = {
+        case "staged" =>
+          SnapshotLog.onStep = _ => ()
+          SnapshotLog.commit(spark,
+            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              SnapshotLog.read(spark, t).schema), t)
+          ()
+        case _ => ()
       }
       val e = intercept[RuntimeException] {
         SnapshotLog.merge(spark, t, Seq((70L, "B70")).toDF("id", "payload"), "id")
@@ -407,7 +414,7 @@ class SnapshotLogCowSpec extends AnyFunSuite with SparkFixture {
       assert(e.getMessage.contains("concurrent modification"), e.getMessage)
       assert(SnapshotLog.read(spark, t).count() == 0L,
         "the truncate's result must survive — no resurrected rows")
-    } finally SnapshotLog.onStagedHook = () => ()
+    } finally SnapshotLog.onStep = _ => ()
   }
 
   test("Cli optimize retries from the new head when a live writer lands mid-compact") {
@@ -419,11 +426,13 @@ class SnapshotLogCowSpec extends AnyFunSuite with SparkFixture {
       // the nightly-maintenance-vs-live-ingest race: an appender lands
       // WHILE the compact rewrites (injected via the stage seam, which
       // fires inside the compact's own commit)
-      SnapshotLog.onStagedHook = () => {
-        SnapshotLog.onStagedHook = () => () // fire once, not on the retry
-        SnapshotLog.commit(spark, Seq((99L, "raced")).toDF("id", "payload"),
-          t, append = true)
-        ()
+      SnapshotLog.onStep = {
+        case "staged" =>
+          SnapshotLog.onStep = _ => () // fire once, not on the retry
+          SnapshotLog.commit(spark, Seq((99L, "raced")).toDF("id", "payload"),
+            t, append = true)
+          ()
+        case _ => ()
       }
       val out = graft.tools.Cli.optimize(spark,
         Array("optimize", t, "--target-files", "1"))
@@ -432,7 +441,7 @@ class SnapshotLogCowSpec extends AnyFunSuite with SparkFixture {
       // NOTHING lost: the racer's row survives the retried compaction
       assert(idsAt(t) == (0L until 10L).toSet + 99L)
       assert(SnapshotLog.readRecord(t, 3L).kind == "optimize")
-    } finally SnapshotLog.onStagedHook = () => ()
+    } finally SnapshotLog.onStep = _ => ()
   }
 
   test("bin-packing OPTIMIZE rewrites only undersized files and is idempotent") {

@@ -517,16 +517,18 @@ class SnapshotLogSpec extends AnyFunSuite with SparkFixture {
     val t = freshTable()
     SnapshotLog.commit(spark, df(1), t)
     try {
-      SnapshotLog.onStagedHook = () => {
-        SnapshotLog.onStagedHook = () => () // the inner commit must not recurse
-        SnapshotLog.commit(spark, df(2), t, append = true, txn = Some(("w", 5L)))
-        ()
+      SnapshotLog.onStep = {
+        case "staged" =>
+          SnapshotLog.onStep = _ => () // the inner commit must not recurse
+          SnapshotLog.commit(spark, df(2), t, append = true, txn = Some(("w", 5L)))
+          ()
+        case _ => ()
       }
       val v = SnapshotLog.commit(spark, df(2), t, append = true, txn = Some(("w", 5L)))
       assert(v == 2L, "the outer commit must resolve to the racer's version")
       assert(SnapshotLog.versions(t) == Seq(1L, 2L), "only ONE commit may land")
       assert(idsAt(t) == Set(1L, 2L), "no duplicate rows from the zombie replay")
-    } finally SnapshotLog.onStagedHook = () => ()
+    } finally SnapshotLog.onStep = _ => ()
   }
 
   test("commit reads its staged output exactly once: count and bounds share one pass") {
