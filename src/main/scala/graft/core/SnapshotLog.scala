@@ -3,8 +3,9 @@ package graft.core
 import java.nio.file.{Files, Path, Paths}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** A minimal transaction log for published parquet artifacts — the
   * publicly documented lakehouse pattern (Delta Lake, Armbrust et al.
@@ -70,7 +71,7 @@ object SnapshotLog {
     * (`remove`, `cdc`, `dataChange`, `nc`), fmt 3 only when the record
     * carries COLUMN MAPPING (`colmap`/`dropcols`) — a reader ignoring
     * those would misname or resurrect columns, so it must fail. */
-  val formatVersion: Int = 4
+  val formatVersion: Int = 5
   /** The LOWEST format a reader must understand to read this record
     * CORRECTLY — the protocol-minimum rule: fields an old reader could
     * not safely ignore bump it. `base` (shallow clone — ignoring it
@@ -78,9 +79,12 @@ object SnapshotLog {
     * `props` (an old WRITER ignoring them would commit violating rows;
     * writers read the head first, so the gate reaches them) stamp 4;
     * column mapping stamps 3; advisory fields (bloom config, `idx`,
-    * `ts`) stay at 2 — ignoring them is slower, never wrong. */
+    * `ts`) stay at 2 — ignoring them is slower, never wrong. A
+    * `tableSchema` stamps 5: a reader ignoring it reads a truncated
+    * table with no columns. */
   private def minFmt(r: CommitRecord): Int =
-    if (r.adds.exists(_.base.isDefined) ||
+    if (r.tableSchema.isDefined) 5
+    else if (r.adds.exists(_.base.isDefined) ||
         r.props.exists(ps => Constraints.of(ps).nonEmpty)) 4
     else if (r.colmap.isDefined || r.dropped.isDefined) 3
     else 2
@@ -98,10 +102,10 @@ object SnapshotLog {
     * for this file (it is always read — skipping may drop files,
     * never rows). `schema` is the Spark schema JSON of the commit
     * that wrote the file (recorded once per record, rehydrated per
-    * entry): it lets the reader PLAN without opening any file — all
-    * same-schema flat files collapse into ONE scan with an explicit
-    * schema, so the read plan is O(distinct schemas), not O(commits),
-    * and planning costs zero footer reads. */
+    * entry): the reader PLANS from it without opening any file — the
+    * entries' schemas union into one explicit read schema
+    * (`schemaAt`), so every flat file is ONE scan and planning costs
+    * zero footer reads. */
   /** `dv` optionally points at the entry's DELETION VECTOR sidecar (a
     * `dv/<uuid>` stage of (path, pos) parquet rows — Delta 3's
     * merge-on-read deletes): readers drop the listed row positions at
@@ -169,6 +173,9 @@ object SnapshotLog {
     * like colmap). Properties are ADVISORY configuration (bloom-index
     * columns, tuning knobs) — a reader that ignores them stays
     * correct, just slower, so they do NOT bump the format version. */
+  /** `tableSchema` is the schema a REPLACE declares beyond its files
+    * (TRUNCATE, CREATE TABLE); the state keeps it until the next
+    * replace, and it leads the version's column union (`schemaAt`). */
   final case class CommitRecord(version: Long, append: Boolean,
                                 adds: Seq[FileEntry],
                                 txn: Option[(String, Long)] = None,
@@ -180,27 +187,30 @@ object SnapshotLog {
                                 colmap: Option[Seq[(String, String)]] = None,
                                 dropped: Option[Seq[String]] = None,
                                 props: Option[Map[String, String]] = None,
-                                ts: Long = 0L) {
+                                ts: Long = 0L,
+                                tableSchema: Option[String] = None) {
     def rows: Long = adds.map(_.rows).sum
     /** append | replace | rewrite | optimize | schema | props — what
       * this commit did. */
     def kind: String =
       if (colmap.isDefined || dropped.isDefined) "schema"
-      else if (props.isDefined && adds.isEmpty && removes.isEmpty) "props"
+      else if (props.isDefined && append && adds.isEmpty && removes.isEmpty) "props"
       else if (!dataChange) "optimize"
       else if (removes.nonEmpty) "rewrite"
       else if (append) "append" else "replace"
   }
 
   /** Resolved table state at a version: the exact live file set, the
-    * high-water batchId per idempotent writer, and the column mapping
-    * (logical -> physical renames + dropped physical names). */
+    * high-water batchId per idempotent writer, the column mapping
+    * (logical -> physical renames + dropped physical names), and the
+    * last replace's declared `tableSchema`. */
   final case class TableState(version: Long, entries: Seq[FileEntry],
                               txns: Map[String, Long],
                               colmap: Seq[(String, String)] = Seq.empty,
                               dropped: Seq[String] = Seq.empty,
                               props: Map[String, String] = Map.empty,
-                              ts: Long = 0L) {
+                              ts: Long = 0L,
+                              tableSchema: Option[String] = None) {
     def mapped: Boolean = colmap.nonEmpty || dropped.nonEmpty
     /** Physical file-column name of a logical column (identity when
       * never renamed). */
@@ -325,6 +335,7 @@ object SnapshotLog {
       val t = o.putObject("txn"); t.put("app", app); t.put("batch", batch)
     }
     r.schema.foreach(s => o.put("schema", s)): Unit
+    r.tableSchema.foreach(s => o.put("tableSchema", s)): Unit
     if (!r.dataChange) o.put("dataChange", false): Unit
     if (r.removes.nonEmpty) {
       val rm = o.putArray("remove")
@@ -453,17 +464,20 @@ object SnapshotLog {
       cdcSchema = cdcSchema,
       dataChange = Option(n.get("dataChange")).forall(_.asBoolean()),
       colmap = colmap, dropped = dropped, props = props,
-      ts = Option(n.get("ts")).map(_.asLong()).getOrElse(0L))
+      ts = Option(n.get("ts")).map(_.asLong()).getOrElse(0L),
+      tableSchema = Option(n.get("tableSchema")).map(_.asText()))
   }
 
   private def stateToJson(st: TableState): String = {
     val o = mapper.createObjectNode()
     o.put("fmt",
-      if (st.entries.exists(_.base.isDefined) ||
+      if (st.tableSchema.isDefined) 5
+      else if (st.entries.exists(_.base.isDefined) ||
           Constraints.of(st.props).nonEmpty) 4
       else if (st.mapped) 3 else 2)
     o.put("version", st.version)
     if (st.ts > 0L) o.put("ts", st.ts): Unit
+    st.tableSchema.foreach(s => o.put("tableSchema", s)): Unit
     if (st.colmap.nonEmpty) {
       val a = o.putArray("colmap")
       st.colmap.foreach { case (l, p) => val e = a.addArray(); e.add(l); e.add(p); () }
@@ -523,7 +537,8 @@ object SnapshotLog {
           Option(en.get("si")).map(si => e.copy(schema = Some(schemas(si.asInt()))))
             .getOrElse(e)
         }, txns, colmap, dropped, props,
-        ts = Option(n.get("ts")).map(_.asLong()).getOrElse(0L)))
+        ts = Option(n.get("ts")).map(_.asLong()).getOrElse(0L),
+        tableSchema = Option(n.get("tableSchema")).map(_.asText())))
     } catch {
       case scala.util.control.NonFatal(e) => sys.error(
         s"corrupt checkpoint ckpt-v$v of $table: ${e.getMessage} — " +
@@ -548,10 +563,11 @@ object SnapshotLog {
   // ------------------------------------------------------------ resolution
 
   private def applyRecord(st: TableState, r: CommitRecord): TableState = {
+    // removes are authoritative: a record carrying them is a rewrite
+    // whatever its append flag says (defense against hand-edited or
+    // future-writer records that combine both)
+    val replace = r.removes.isEmpty && !r.append
     val entries =
-      // removes are authoritative: a record carrying them is a rewrite
-      // whatever its append flag says (defense against hand-edited or
-      // future-writer records that combine both)
       if (r.removes.nonEmpty) {
         val gone = r.removes.toSet
         st.entries.filterNot(e => gone(e.path)) ++ r.adds
@@ -568,7 +584,8 @@ object SnapshotLog {
       r.dropped.getOrElse(st.dropped),
       // properties, like the mapping and txns, survive replaces
       r.props.getOrElse(st.props),
-      math.max(st.ts, r.ts))
+      math.max(st.ts, r.ts),
+      if (replace) r.tableSchema else st.tableSchema)
   }
 
   /** Resolve the full table state at `v`: walk back to the nearest
@@ -859,7 +876,7 @@ object SnapshotLog {
     // appends extend the live entry set: shared columns must agree in
     // type (or widen exactly) or the read-side union fails later
     if (append) headState.foreach(s =>
-      requireWriteCompatible(table, dfPhys.schema, s.entries))
+      requireWriteCompatible(table, dfPhys.schema, s.tableSchema.toSeq ++ s.entries.flatMap(_.schema)))
     val (_, adds) =
       stageEntries(spark, dfPhys, table, partByPhys,
         (statsPhys ++ carryCols).distinct, bloom = bloom, checks = checks)
@@ -869,6 +886,22 @@ object SnapshotLog {
     publish(table, headV, loser)(v => CommitRecord(v, append && v > 1, adds, txn,
       schema = if (adds.isEmpty) None else Some(dfPhys.schema.json),
       dataChange = dataChange, props = props))
+  }
+
+  /** Redefine the table as EMPTY with the LOGICAL `schema` (TRUNCATE,
+    * a bare DELETE, CREATE TABLE with its `props`): a replace record
+    * with no adds that declares `tableSchema`. No data file is staged.
+    * A blind write (conflict table row `Blind`), like `commit`'s. */
+  def commitEmpty(table: String, schema: StructType,
+                  props: Option[Map[String, String]] = None): Long = {
+    val head = resolveHead(table)
+    // a mapped table records PHYSICAL names, like a staged write
+    val phys = head.filter(_.mapped).fold(schema)(st =>
+      StructType(schema.fields.map(f => f.copy(name = st.physOf(f.name)))))
+    val checks = Constraints.of(props.orElse(head.map(_.props)).getOrElse(Map.empty))
+    publish(table, head.fold(0L)(_.version), Loser.Blind(None, checks.map(_._1).toSet))(
+      v => CommitRecord(v, append = false, adds = Seq.empty,
+        props = props, tableSchema = Some(phys.json)))
   }
 
   /** Stage `df` as immutable parquet files under `<table>/<root>/
@@ -1104,8 +1137,8 @@ object SnapshotLog {
     // the staged adds will coexist with the CARRIED entries: types must
     // agree (or widen exactly) with every surviving file's schema
     val goneSet = removePaths.toSet
-    requireWriteCompatible(table, df.schema,
-      prev.entries.filterNot(e => goneSet(e.path)))
+    requireWriteCompatible(table, df.schema, prev.tableSchema.toSeq ++
+      prev.entries.filterNot(e => goneSet(e.path)).flatMap(_.schema))
     // bloom-indexed columns and CHECK constraints ride the rewrite too
     // (resolved from the base version's properties, logical -> physical)
     val bloom = BloomIndex.specOf(prev.props).map(s =>
@@ -1155,7 +1188,8 @@ object SnapshotLog {
     if (missing.nonEmpty) sys.error(
       s"cannot restore $table to v$toVersion: ${missing.size} of its data files " +
         s"were vacuumed (first: ${missing.head.path})")
-    publish(table, headV, Loser.Restore)(v => CommitRecord(v, append = false, target.entries))
+    publish(table, headV, Loser.Restore)(v => CommitRecord(v, append = false, target.entries,
+      tableSchema = target.tableSchema))
   }
 
   /** SHALLOW CLONE (Delta's CLONE): define `dst` as a NEW table whose
@@ -1191,13 +1225,8 @@ object SnapshotLog {
         dv = e.dv.map(d => if (d.startsWith("/")) d else s"$srcRoot/$d"),
         idx = e.idx.map(i => if (i.startsWith("/")) i else s"$srcRoot/$i"))
     }
-    // the record needs a schema even when the source head is empty —
-    // walk only the SURVIVING records (early history may be vacuumed)
-    val schemaJson = st.entries.flatMap(_.schema).headOption
-      .orElse(versions(src).reverse.view
-        .flatMap(v => readRecord(src, v).schema).headOption)
     publish(dst, 0L, Loser.Clone)(v => CommitRecord(v, append = false, adds = entries,
-      schema = schemaJson,
+      schema = st.entries.flatMap(_.schema).headOption, tableSchema = st.tableSchema,
       colmap = if (st.colmap.nonEmpty) Some(st.colmap) else None,
       dropped = if (st.dropped.nonEmpty) Some(st.dropped) else None,
       props = if (st.props.nonEmpty) Some(st.props) else None))
@@ -1257,9 +1286,8 @@ object SnapshotLog {
   def renameColumn(spark: SparkSession, table: String,
                    oldName: String, newName: String): Long = {
     require(oldName != newName, "rename to the same name is a no-op")
-    val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, headV)
-    val logical = read(spark, table, Some(headV)).schema.fieldNames.toSeq
+    val st = resolveAt(table)
+    val logical = logicalSchema(table, st).fieldNames.toSeq
     require(logical.contains(oldName),
       s"no column $oldName in $table (have ${logical.mkString(", ")})")
     require(!logical.contains(newName), s"column $newName already exists in $table")
@@ -1278,7 +1306,7 @@ object SnapshotLog {
       .filter(_ => st.props.contains(BloomIndex.ColumnsProp))
       .map(v => st.props + (BloomIndex.ColumnsProp -> v))
       .filterNot(_ == st.props)
-    publish(table, headV, Loser.SchemaChange)(v => CommitRecord(v, append = true,
+    publish(table, st.version, Loser.SchemaChange)(v => CommitRecord(v, append = true,
       adds = Seq.empty, dataChange = false,
       colmap = Some(newMap), dropped = Some(st.dropped), props = newProps))
   }
@@ -1287,9 +1315,8 @@ object SnapshotLog {
     * the physical column stays in the files (old snapshots still read
     * it) but the head's logical schema excludes it. */
   def dropColumn(spark: SparkSession, table: String, name: String): Long = {
-    val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, headV)
-    val logical = read(spark, table, Some(headV)).schema.fieldNames.toSeq
+    val st = resolveAt(table)
+    val logical = logicalSchema(table, st).fieldNames.toSeq
     require(logical.contains(name),
       s"no column $name in $table (have ${logical.mkString(", ")})")
     require(logical.size > 1, s"cannot drop the last column of $table")
@@ -1301,7 +1328,7 @@ object SnapshotLog {
       if (kept.isEmpty) st.props - BloomIndex.ColumnsProp
       else st.props + (BloomIndex.ColumnsProp -> kept.mkString(","))
     }.filterNot(_ == st.props)
-    publish(table, headV, Loser.SchemaChange)(v => CommitRecord(v, append = true,
+    publish(table, st.version, Loser.SchemaChange)(v => CommitRecord(v, append = true,
       adds = Seq.empty, dataChange = false,
       colmap = Some(st.colmap.filterNot(_._1 == name)),
       dropped = Some((st.dropped :+ phys).distinct), props = newProps))
@@ -1396,19 +1423,19 @@ object SnapshotLog {
     * data skipping is unaffected; compaction/merge materialize the
     * deletions (their rewrites read through the vectors). */
   def deleteWhere(spark: SparkSession, table: String, p: Pred): Long = {
-    val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, headV)
+    val st = resolveAt(table)
     val pp = renamePred(p, st.physOf) // logical predicate in, physical files
     val cand = st.entries.filter(mightMatch(_, pp))
-    if (cand.isEmpty) return headV // provably nothing to delete
-    val data = readTagged(spark, table, cand) // live rows only (dvs applied)
+    if (cand.isEmpty) return st.version // provably nothing to delete
+    // live rows only (dvs applied)
+    val data = readTagged(spark, table, cand, physicalSchema(table, None, cand))
     val pos = data.filter(predColumn(data, pp))
       .select(col(RelCol).as("path"), col(PosCol).as("pos")).persist()
     try {
       val counts = pos.groupBy("path").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       // no live row matched: empty counts make commitDelta a no-op
-      commitDelta(spark, table, headV, Some(pos), counts, Seq.empty, None)
+      commitDelta(spark, table, st.version, Some(pos), counts, Seq.empty, None)
     } finally { pos.unpersist(); () }
   }
 
@@ -1450,10 +1477,7 @@ object SnapshotLog {
     val st = resolve(table, expectedHead)
     // the staged INSERT rows (SQL MERGE / UPDATE post-images written by
     // executor tasks), read by the constraint check and the change feed
-    lazy val inserted = spark.read
-      .schema(org.apache.spark.sql.types.DataType.fromJson(insertSchemaJson.get)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .parquet(insertAdds.map(e => dataAbs(table, e)): _*)
+    lazy val inserted = readFiles(spark, table, insertAdds)
     // CHECK constraints over the staged inserts (they bypass the commit
     // stats pass): one driver-triggered aggregate, pre-publish — a
     // violating DML never becomes visible. Deletes only remove rows
@@ -1478,7 +1502,7 @@ object SnapshotLog {
     // fail BEFORE touching disk: merge-on-read vectors (and the cdc
     // pre-image read) support flat staged layouts only; hive-partitioned
     // tables take COW merge instead
-    affected.find(_.path.split("/").drop(2).exists(_.contains("="))).foreach(e =>
+    affected.find(isHive).foreach(e =>
       sys.error(s"row-level DML supports flat staged layouts only; " +
         s"${e.path} is hive-partitioned — use SnapshotLog.merge/applyChanges (COW)"))
     val relisted =
@@ -1508,7 +1532,7 @@ object SnapshotLog {
     // inserted rows
     val pre =
       if (affected.isEmpty) None
-      else Some(readTagged(spark, table, affected, only = posDf)
+      else Some(readTagged(spark, table, affected, physicalSchema(table, None, affected), posDf)
         .drop(RelCol, PosCol).withColumn("_change_type", lit("delete")))
     val ins =
       if (insertAdds.isEmpty) None
@@ -1527,20 +1551,30 @@ object SnapshotLog {
   // ----------------------------------------------------------------- reads
 
   /** Snapshot read: the resolved version's exact file list, no
-    * directory listing of `data/`. `asOf=None` reads the head. Files
-    * are grouped by their commit's stage directory and each group
-    * reads with that stage as `basePath`, so hive `col=value/`
-    * segments in staged layouts come back as partition COLUMNS and
-    * partition filters still prune at the directory level — log-based
-    * listing costs none of the pruning a plain partitioned read gets. */
+    * directory listing of `data/`, over `schemaAt`'s columns.
+    * `asOf=None` reads the head. Hive stages read with the stage as
+    * `basePath`, so partition filters still prune at the directory
+    * level (`readFiles`). */
   def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(table))
-      .getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, v)
+    val st = resolveAt(table, asOf)
     // the column mapping is VERSIONED state: time travel to a version
     // before a rename reads under the names of that time
-    applyColmap(readFiles(spark, table, st.entries), st)
+    applyColmap(readFiles(spark, table, st.entries, st.tableSchema), st)
   }
+
+  /** The columns version `asOf` (default: the head) reads with, from
+    * the resolved log state alone: no listing, no plan, no footer
+    * (except for entries of pre-schema records). */
+  def schemaAt(table: String, asOf: Option[Long] = None): StructType =
+    logicalSchema(table, resolveAt(table, asOf))
+
+  private def logicalSchema(table: String, st: TableState): StructType =
+    StructType(physicalSchema(table, st.tableSchema, st.entries).fields.flatMap(f =>
+      st.logicalOf(f.name).map(l => f.copy(name = l))))
+
+  private def resolveAt(table: String, asOf: Option[Long] = None): TableState =
+    resolve(table, asOf.orElse(latestVersion(table))
+      .getOrElse(sys.error(s"no committed version in $table")))
 
   /** The commit instant of version `v`: the IN-COMMIT timestamp the
     * record carries (monotonic data, survives copies/backups/restores
@@ -1587,16 +1621,18 @@ object SnapshotLog {
 
   /** Exact-only TYPE WIDENING partial order (Delta's type widening
     * set): may a column recorded as `from` re-declare as `to` with
-    * zero value change? Integral up-chain, small-integral -> float,
-    * and everything-exact -> double. long -> double and int -> float
-    * are LOSSY (beyond 2^53 / 2^24) and refuse. */
+    * zero value change? Integral up-chain and everything-exact ->
+    * double — exactly the widenings Spark's parquet readers decode, so
+    * one scan with the widest type reads every file. long -> double and
+    * int -> float are LOSSY (beyond 2^53 / 2^24) and refuse; byte/short
+    * -> float are exact but neither parquet reader decodes them. */
   private[core] def widensTo(from: org.apache.spark.sql.types.DataType,
                              to: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
     if (from == to) true
     else (from, to) match {
-      case (ByteType, ShortType | IntegerType | LongType | FloatType | DoubleType) => true
-      case (ShortType, IntegerType | LongType | FloatType | DoubleType) => true
+      case (ByteType, ShortType | IntegerType | LongType | DoubleType) => true
+      case (ShortType, IntegerType | LongType | DoubleType) => true
       case (IntegerType, LongType | DoubleType) => true
       case (FloatType, DoubleType) => true
       case _ => false
@@ -1609,22 +1645,23 @@ object SnapshotLog {
     * re-declared INT as STRING would make the read-side union coerce
     * through string casts that fail (or silently convert) at scan
     * time, long after the bad write was accepted. Refusing at the
-    * write is the honest failure. Entries without a recorded schema
-    * skip (pre-schema records). Non-append REPLACES redefine the table
-    * and may change anything. */
+    * write is the honest failure. `existing` are the recorded schema
+    * JSONs the write joins (entries without one — pre-schema records —
+    * skip). Non-append REPLACES redefine the table and may change
+    * anything. */
   private def requireWriteCompatible(table: String,
                                      staged: org.apache.spark.sql.types.StructType,
-                                     existing: Seq[FileEntry]): Unit = {
+                                     existing: Seq[String]): Unit = {
     import org.apache.spark.sql.types._
     val stagedTypes = staged.fields.map(f => f.name -> f.dataType).toMap
-    existing.flatMap(_.schema).distinct.foreach { sj =>
+    existing.distinct.foreach { sj =>
       DataType.fromJson(sj).asInstanceOf[StructType].fields.foreach { f =>
         stagedTypes.get(f.name).foreach { st =>
           if (!widensTo(f.dataType, st) && !widensTo(st, f.dataType)) sys.error(
             s"incompatible write to $table: column ${f.name} is " +
               s"${f.dataType.simpleString} in existing files and ${st.simpleString} " +
               "in this write — graft-log accepts only exact numeric widenings " +
-              "(byte<short<int<long; byte,short<float; byte,short,int,float<double). " +
+              "(byte<short<int<long; byte,short,int,float<double). " +
               "Rewrite the table (replace) or use a new column name")
         }
       }
@@ -1640,75 +1677,91 @@ object SnapshotLog {
   private[graft] def sideAbs(table: String, rel: String): String =
     if (rel.startsWith("/")) rel else s"$table/$rel"
 
-  /** Plan the read of an exact entry list. Flat (unpartitioned) files
-    * whose commits recorded the SAME schema collapse into ONE parquet
-    * scan with that schema given explicitly — the read plan is
-    * O(distinct schemas), not O(commits), and planning opens no file
-    * (a 500-append ingest chain would otherwise build a 500-way union
-    * and read 500 footers just to plan). Hive-partitioned stages keep
-    * a per-stage read (basePath restores the partition columns).
-    * Groups union by NAME with allowMissingColumns: an append commit
-    * may carry MORE columns than the base (schema evolution) — older
-    * groups surface null for the new column instead of failing the
-    * union or silently dropping it (the plain multi-path parquet read
-    * without mergeSchema picks ONE file's schema — exactly the
-    * silent-loss trap the grouped union avoids). */
-  private def readFiles(spark: SparkSession, table: String,
-                        entries: Seq[FileEntry]): DataFrame =
-    if (entries.isEmpty) spark.emptyDataFrame
-    else {
-      // entries carrying DELETION VECTORS take the merge-on-read path
-      // (position tagging + anti-join); clean entries keep the plain
-      // vectorized scan with zero overhead
-      val (dved, plain) = entries.partition(_.dv.isDefined)
-      val parts =
-        (if (plain.isEmpty) Seq.empty
-         else Seq(readPlainFiles(spark, table, plain))) ++
-        (if (dved.isEmpty) Seq.empty
-         else Seq(readTagged(spark, table, dved).drop(RelCol, PosCol)))
-      parts.reduce(_.unionByName(_, allowMissingColumns = true))
+  /** THE column union of a read: `lead` (a replace's declared
+    * `tableSchema`) first, then the entries' recorded schemas in the
+    * order the scans visit them — plain hive stages by (root, stage),
+    * then plain flat entries, then deletion-vectored ones, by first
+    * path. A column keeps its first position and takes the type every
+    * other recorded type widens to (`widensTo`). Every field is
+    * nullable and a hive stage's partition columns follow its data
+    * columns, as Spark's file sources read them (so is field metadata,
+    * as `unionByName` keeps it). A pre-schema stage takes its footer's. */
+  private def physicalSchema(table: String, lead: Option[String],
+                             entries: Seq[FileEntry]): StructType = {
+    def recorded(sj: String): StructType = org.apache.spark.sql.graft.Bridge.asNullable(
+      DataType.fromJson(sj).asInstanceOf[StructType])
+    def footer(st: (String, String)) = Tables.schemaOf(SparkSession.active, s"${st._1}/${st._2}")
+    def flat(es: Seq[FileEntry]): Seq[StructType] =
+      es.sortBy(_.path).map(_.schema).distinct.flatMap {
+        case Some(sj) => Seq(recorded(sj))
+        case None => byStage(table, es.filter(_.schema.isEmpty)).map(g => footer(g._1))
+      }
+    val (dved, plain) = entries.partition(_.dv.isDefined)
+    val (hive, flatPlain) = plain.partition(isHive)
+    val hiveSchemas = byStage(table, hive).map { case (stage, es) =>
+      es.head.schema.fold(footer(stage)) { sj =>
+        val partCols = es.head.path.split("/").drop(2).dropRight(1).filter(_.contains("="))
+          .map(seg => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(seg.substring(0, seg.indexOf('='))))
+        val (parts, data) = recorded(sj).fields.partition(f => partCols.contains(f.name))
+        StructType(data ++ partCols.flatMap(c => parts.find(_.name == c))
+          .map(f => StructField(f.name, f.dataType)))
+      }
     }
+    (lead.map(recorded).toSeq ++ hiveSchemas ++ flat(flatPlain) ++ flat(dved))
+      .reduceOption { (acc, s) =>
+        StructType(acc.fields.map { a =>
+          s.find(_.name == a.name).map(_.dataType).filterNot(widensTo(_, a.dataType)) match {
+            case None => a
+            case Some(t) if widensTo(a.dataType, t) => StructField(a.name, t)
+            case Some(t) => sys.error(s"column ${a.name} of $table is recorded as both " +
+              s"${a.dataType.simpleString} and ${t.simpleString}, and neither widens to the other")
+          }
+        } ++ s.fields.filterNot(f => acc.fieldNames.contains(f.name))
+          .map(f => StructField(f.name, f.dataType)))
+      }.getOrElse(new StructType())
+  }
 
-  private def readPlainFiles(spark: SparkSession, table: String,
-                             entries: Seq[FileEntry]): DataFrame =
-    {
-      def schemaOf(sj: String): org.apache.spark.sql.types.StructType =
-        org.apache.spark.sql.types.DataType.fromJson(sj)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val (part, flat) = entries.partition(
-        _.path.split("/").drop(2).exists(_.contains("=")))
-      // group by (base, stage): a clone's entries resolve under the
-      // SOURCE root, so their basePath must too
-      val partReads = part.groupBy(e => (e.base.getOrElse(table), stageOf(e.path)))
-        .toSeq.sortBy(_._1)
-        .map { case ((root, stage), es) =>
-          val r0 = spark.read.option("basePath", s"$root/$stage")
-          val r = es.head.schema.fold(r0)(sj => r0.schema(schemaOf(sj)))
-          r.parquet(es.map(e => dataAbs(table, e)).sorted: _*)
-        }
-      val flatReads = flat.groupBy(_.schema).toSeq
-        .sortBy(_._2.map(_.path).min).flatMap {
-          case (Some(sj), es) =>
-            Seq(spark.read.schema(schemaOf(sj))
-              .parquet(es.map(e => dataAbs(table, e)).sorted: _*))
-          case (None, es) => // schema-less record: per-stage inference
-            es.groupBy(e => (e.base.getOrElse(table), stageOf(e.path)))
-              .toSeq.sortBy(_._1).map {
-              case ((root, stage), ss) =>
-                spark.read.option("basePath", s"$root/$stage")
-                  .parquet(ss.map(e => dataAbs(table, e)).sorted: _*)
-            }
-        }
-      (partReads ++ flatReads).reduce(_.unionByName(_, allowMissingColumns = true))
+  private def isHive(e: FileEntry): Boolean = e.path.split("/").drop(2).exists(_.contains("="))
+
+  /** Entries by (data root, stage): a clone's live under the SOURCE root. */
+  private def byStage(table: String, es: Seq[FileEntry]): Seq[((String, String), Seq[FileEntry])] =
+    es.groupBy(e => (e.base.getOrElse(table), stageOf(e.path))).toSeq.sortBy(_._1)
+
+  private def files(table: String, es: Seq[FileEntry]): Seq[String] = es.map(dataAbs(table, _)).sorted
+
+  /** Read an exact entry list over its `physicalSchema` (led by
+    * `lead`): ONE scan of the clean flat files, one per hive stage with
+    * the stage as `basePath` (its `col=value/` segments come back as
+    * partition columns), one tagged scan of the deletion-vectored
+    * files. A file missing a column reads null; a narrower type decodes
+    * as the wider one. No entry: an empty frame with the schema. */
+  private def readFiles(spark: SparkSession, table: String, entries: Seq[FileEntry],
+                        lead: Option[String] = None): DataFrame = {
+    val schema = physicalSchema(table, lead, entries)
+    val (dved, plain) = entries.partition(_.dv.isDefined)
+    val (hive, flat) = plain.partition(isHive)
+    val scans = byStage(table, hive).map { case ((root, stage), es) =>
+      spark.read.option("basePath", s"$root/$stage").schema(schema).parquet(files(table, es): _*)
+    } ++ Some(flat).filter(_.nonEmpty).map(es =>
+      spark.read.schema(schema).parquet(files(table, es): _*)) ++
+      Some(dved).filter(_.nonEmpty).map(readTagged(spark, table, _, schema).drop(RelCol, PosCol))
+    if (scans.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else {
+      val df = scans.reduce(_.unionByName(_))
+      // a hive scan moves its partition columns last: restore the union's order
+      if (df.columns.sameElements(schema.fieldNames)) df
+      else df.select(schema.fieldNames.toSeq.map(col): _*)
     }
+  }
 
   /** Position-tag column names for the merge-on-read path. */
   private val RelCol = "_graft_rel"
   private val PosCol = "_graft_pos"
 
-  /** Read FLAT entries with their table-relative path and in-file row
-    * position tagged (`_metadata.file_path` / `_metadata.row_index` —
-    * the public parquet metadata columns).
+  /** Read FLAT entries over `schema` with their table-relative path
+    * and in-file row position tagged (`_metadata.file_path` /
+    * `_metadata.row_index` — the public parquet metadata columns).
     *
     * With `only = None`, deletion vectors are APPLIED: dead (path, pos)
     * pairs anti-join away at scan time. This is both the merge-on-read
@@ -1727,31 +1780,17 @@ object SnapshotLog {
     * (path, pos) semi-join then drops an ordinal killed in another
     * file. */
   private def readTagged(spark: SparkSession, table: String,
-                         entries: Seq[FileEntry],
+                         entries: Seq[FileEntry], schema: StructType,
                          only: Option[DataFrame] = None): DataFrame = {
-    entries.find(_.path.split("/").drop(2).exists(_.contains("="))).foreach(e =>
+    entries.find(isHive).foreach(e =>
       sys.error(s"merge-on-read supports flat staged layouts only: ${e.path}"))
-    def schemaOf(sj: String): org.apache.spark.sql.types.StructType =
-      org.apache.spark.sql.types.DataType.fromJson(sj)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val reads = entries.groupBy(_.schema).toSeq
-      .sortBy(_._2.map(_.path).min).flatMap {
-        case (Some(sj), es) =>
-          Seq(spark.read.schema(schemaOf(sj))
-            .parquet(es.map(e => dataAbs(table, e)).sorted: _*))
-        case (None, es) => es.groupBy(e => stageOf(e.path)).toSeq.sortBy(_._1)
-          .map { case (_, ss) =>
-            spark.read.parquet(ss.map(e => dataAbs(table, e)).sorted: _*)
-          }
-      }
     // collision-proof temp column for the absolute file path: a user
     // column literally named _graft_file0 must survive the read
     val fileCol = Iterator.from(0).map(i => s"_graft_file$i")
-      .find(c => !reads.exists(_.columns.contains(c))).get
-    val raw = reads.map(_
+      .find(c => !schema.fieldNames.contains(c)).get
+    val raw = spark.read.schema(schema).parquet(files(table, entries): _*)
       .withColumn(fileCol, col("_metadata.file_path"))
-      .withColumn(PosCol, col("_metadata.row_index")))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .withColumn(PosCol, col("_metadata.row_index"))
     def tag(df: DataFrame): DataFrame = df
       // the SOURCE-relative "data/<stage>/<f>" of the absolute path, so
       // clone entries key identically to the source's dv rows
@@ -1771,16 +1810,6 @@ object SnapshotLog {
           Seq(RelCol, PosCol), "left_anti")
     }
   }
-
-  /** The table's schema with ZERO rows — what a fully-pruned read
-    * returns. One representative entry per stage unioned under the
-    * same evolution rules as a real read, filtered to nothing. */
-  private def emptyLike(spark: SparkSession, table: String,
-                        entries: Seq[FileEntry]): DataFrame =
-    if (entries.isEmpty) spark.emptyDataFrame
-    else readFiles(spark, table,
-      entries.groupBy(e => stageOf(e.path)).values.map(_.head).toSeq)
-      .filter(lit(false))
 
   /** Manifest-side file pruning for a range predicate on an indexed
     * column: (kept, skipped). A file keeps when its [lo, hi] overlaps
@@ -1906,9 +1935,7 @@ object SnapshotLog {
     * indexed columns prunes with both sets of bounds. */
   def prunedFilesWhere(table: String, p: Pred,
                        asOf: Option[Long] = None): (Seq[String], Seq[String]) = {
-    val v = asOf.orElse(latestVersion(table))
-      .getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, v)
+    val st = resolveAt(table, asOf)
     val pp = renamePred(p, st.physOf) // predicates arrive logical; stats are physical
     st.entries.partition(mightMatch(_, pp)) match {
       case (k, s) => (k.map(_.path), s.map(_.path))
@@ -1921,9 +1948,7 @@ object SnapshotLog {
     * table's full (evolved) schema rather than failing. */
   def readWhere(spark: SparkSession, table: String, p: Pred,
                 asOf: Option[Long] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(table))
-      .getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, v)
+    val st = resolveAt(table, asOf)
     val pp = renamePred(p, st.physOf)
     val (keptB, _) = st.entries.partition(mightMatch(_, pp))
     // bloom tier: point-equality atoms probe the per-file sidecars —
@@ -1938,9 +1963,10 @@ object SnapshotLog {
         BloomIndex.prune(table, keptB, pp, Int.MaxValue,
           scala.collection.mutable.Map.empty)
       else keptB
-    if (kept.isEmpty) applyColmap(emptyLike(spark, table, st.entries), st)
+    if (kept.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), logicalSchema(table, st))
     else {
-      val out = readFiles(spark, table, kept)
+      val out = readFiles(spark, table, kept, st.tableSchema)
       applyColmap(out.filter(predColumn(out, pp)), st)
     }
   }
@@ -1964,9 +1990,8 @@ object SnapshotLog {
   def compact(spark: SparkSession, table: String, targetFiles: Int,
               clusterBy: Seq[String] = Seq.empty,
               partitionBy: Seq[String] = Seq.empty): Long = {
-    val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, headV)
-    val head = read(spark, table, Some(headV))
+    val st = resolveAt(table)
+    val head = read(spark, table, Some(st.version))
     // stats-friendly default: a bare compact CLUSTERS by the table's
     // indexed columns (dominant-clustering first) instead of hash-
     // scattering — a plain `repartition(n)` would silently destroy any
@@ -1984,7 +2009,7 @@ object SnapshotLog {
     // partitionBy preserves (or introduces) a hive directory layout
     // through the rewrite — without it a compaction of a partitioned
     // table silently flattens it and directory pruning dies
-    commit(spark, laid, table, expectedHead = Some(headV), dataChange = false,
+    commit(spark, laid, table, expectedHead = Some(st.version), dataChange = false,
       partitionBy = partitionBy,
       statsFor = indexedColumns(st).flatMap(st.logicalOf).filter(head.columns.contains))
   }
@@ -2007,8 +2032,7 @@ object SnapshotLog {
   def compactSmall(spark: SparkSession, table: String, minFileBytes: Long,
                    clusterBy: Seq[String] = Seq.empty,
                    minSmall: Int = 2): Long = {
-    val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, headV)
+    val st = resolveAt(table)
     // LIVE bytes: a file mostly dead behind a deletion vector is
     // effectively small — packing it materializes the deletions and
     // drops the vector (Delta's REORG/PURGE folded into OPTIMIZE)
@@ -2026,7 +2050,7 @@ object SnapshotLog {
     // lone vector-carrying file is always worth the reorg (materialize
     // + drop the sidecar)
     if (small.size < math.max(minSmall, 2) && !small.exists(_.dv.isDefined))
-      return headV
+      return st.version
     val total = small.map(sizeOf).sum
     val targetFiles = math.max(1L, (total + minFileBytes - 1) / minFileBytes).toInt
     val head = readFiles(spark, table, small)
@@ -2037,7 +2061,7 @@ object SnapshotLog {
       if (clusterCols.nonEmpty)
         head.repartitionByRange(targetFiles, clusterCols.map(col): _*)
       else head.repartition(targetFiles)
-    commitRewrite(spark, laid, table, small.map(_.path), headV,
+    commitRewrite(spark, laid, table, small.map(_.path), st.version,
       statsFor = indexedColumns(st).filter(head.columns.contains),
       dataChange = false)
   }
@@ -2059,8 +2083,7 @@ object SnapshotLog {
                    value: Option[String], targetFiles: Int,
                    clusterBy: Seq[String] = Seq.empty): Long = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, headV)
+    val st = resolveAt(table)
     val phys = st.physOf(partCol)
     def partOf(e: FileEntry): Option[Option[String]] =
       e.path.split("/").drop(2).dropRight(1).filter(_.contains("="))
@@ -2078,7 +2101,7 @@ object SnapshotLog {
         (if (have.isEmpty) "none — is the table hive-partitioned?" else "") + ")")
     }
     if (touched.size <= targetFiles && !touched.exists(_.dv.isDefined))
-      return headV // already compact and vector-free: no-op, no commit
+      return st.version // already compact and vector-free: no-op, no commit
     // the full hive column list of the touched layout (all entries of
     // one partition value share it by construction)
     val partCols = touched.head.path.split("/").drop(2).dropRight(1)
@@ -2095,7 +2118,7 @@ object SnapshotLog {
       if (clusterCols.nonEmpty)
         head.repartitionByRange(targetFiles, clusterCols.map(col): _*)
       else head.repartition(targetFiles)
-    commitRewrite(spark, laid, table, touched.map(_.path), headV,
+    commitRewrite(spark, laid, table, touched.map(_.path), st.version,
       statsFor = indexedColumns(st).filter(head.columns.contains),
       dataChange = false, partitionBy = partCols)
   }
@@ -2165,9 +2188,8 @@ object SnapshotLog {
     require(cols.size >= 2, s"z-order needs >= 2 columns, got $cols")
     require(cols.size * bits <= 62,
       s"${cols.size} dims x $bits bits overflow the interleaved long key")
-    val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, headV)
-    val head = read(spark, table, Some(headV))
+    val st = resolveAt(table)
+    val head = read(spark, table, Some(st.version))
     // ONE pass for every dimension's range (fused aggregate)
     val aggExprs = cols.flatMap(c =>
       Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
@@ -2191,7 +2213,7 @@ object SnapshotLog {
       .repartitionByRange(targetFiles, col(zc))
       .sortWithinPartitions(zc)
       .drop(zc)
-    commit(spark, laid, table, expectedHead = Some(headV), dataChange = false,
+    commit(spark, laid, table, expectedHead = Some(st.version), dataChange = false,
       statsFor = (indexedColumns(st).flatMap(st.logicalOf) ++ cols).distinct
         .filter(head.columns.contains))
   }
@@ -2296,8 +2318,7 @@ object SnapshotLog {
     * commit's row-level delta to incremental consumers. */
   def merge(spark: SparkSession, table: String, updates0: DataFrame,
             key: String): Long = {
-    val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, headV)
+    val st = resolveAt(table)
     // the update batch evaluates several times (key pruning, the
     // anti-join, the change-data stage) — persist it so an expensive
     // upstream lineage (a CDC decode, a join) runs once, not four
@@ -2318,7 +2339,7 @@ object SnapshotLog {
           // batch MISSING table columns null-fills them in the rows it
           // replaces (upserts are whole-row replacements)
           .unionByName(updates, allowMissingColumns = true)
-      commitRewrite(spark, staged, table, rewrite.map(_.path), headV,
+      commitRewrite(spark, staged, table, rewrite.map(_.path), st.version,
         statsFor = indexedColumns(st).filter(staged.columns.contains),
         changeData = Some(updates.withColumn("_change_type", lit("upsert"))))
     } finally { updates.unpersist(); () }
@@ -2338,8 +2359,7 @@ object SnapshotLog {
     * `readChangeFeed`. */
   def applyChanges(spark: SparkSession, table: String, changes0: DataFrame,
                    key: String, opCol: String = "op"): Long = {
-    val headV = latestVersion(table).getOrElse(sys.error(s"no committed version in $table"))
-    val st = resolve(table, headV)
+    val st = resolveAt(table)
     val changes = toPhysicalDf(changes0, st).persist() // evaluated 4x — see merge
     val pkey = st.physOf(key)
     try {
@@ -2358,7 +2378,7 @@ object SnapshotLog {
             .when(col(opCol) === "U", lit("update"))
             .otherwise(lit("insert")))
         .drop(opCol)
-      commitRewrite(spark, staged, table, rewrite.map(_.path), headV,
+      commitRewrite(spark, staged, table, rewrite.map(_.path), st.version,
         statsFor = indexedColumns(st).filter(staged.columns.contains),
         changeData = Some(cdc))
     } finally { changes.unpersist(); () }
@@ -2415,12 +2435,10 @@ object SnapshotLog {
       s"version ${r.version} is a ${r.kind} commit — its delta includes " +
         "updates or deletes plain rows cannot express; use readChangeFeed " +
         "for the row-level feed, or re-read the snapshot"))
-    val newEntries = recs.flatMap(_.adds)
-    if (newEntries.isEmpty) spark.emptyDataFrame
-    // shares the grouped-scan union (incl. allowMissingColumns), so
-    // the change feed tolerates the same schema evolution the snapshot
-    // read does; the delta surfaces under the UNTIL version's mapping
-    else applyColmap(readFiles(spark, table, newEntries), resolve(table, untilV))
+    // shares the snapshot read's column union, so the change feed
+    // tolerates the same schema evolution; the delta surfaces under the
+    // UNTIL version's mapping
+    applyColmap(readFiles(spark, table, recs.flatMap(_.adds)), resolve(table, untilV))
   }
 
   /** ROW-LEVEL change feed (CDF): every change in (sinceV, untilV] as
@@ -2442,10 +2460,8 @@ object SnapshotLog {
     * pre-image rows it positively identified — consumers keying on the
     * delete's key column work with both; pre-image columns are a
     * bonus, not a contract. The read plans one scan per commit in the
-    * range — the
-    * per-version attribution an incremental consumer needs; polls
-    * cover small ranges, and the grouped O(distinct schemas) plan
-    * remains the SNAPSHOT read's shape. */
+    * range — the per-version attribution an incremental consumer
+    * needs; polls cover small ranges. */
   def readChangeFeed(spark: SparkSession, table: String,
                      sinceV: Long, untilV: Long): DataFrame = {
     val recs = contiguousRange(table, sinceV, untilV).map(readRecord(table, _))

@@ -82,35 +82,26 @@ class LogCatalog extends TableCatalog with SupportsNamespaces
 
   override def tableExists(ident: Identifier): Boolean = isTable(tablePath(ident))
 
-  override def loadTable(ident: Identifier): Table = {
-    val p = tablePath(ident)
-    if (!isTable(p)) throw new NoSuchTableException(ident)
-    val t = p.toString
-    val schema = SnapshotLog.read(SparkSession.active, t).schema
-    new LogStreamTable(t, schema, partitionColsOf(p))
-  }
+  override def loadTable(ident: Identifier): Table = load(ident, _ => None)
 
   /** SQL `VERSION AS OF <v>`: the table pinned at a log version. */
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val p = tablePath(ident)
-    if (!isTable(p)) throw new NoSuchTableException(ident)
-    val v = try version.toLong catch {
+  override def loadTable(ident: Identifier, version: String): Table =
+    load(ident, _ => Some(try version.toLong catch {
       case _: NumberFormatException =>
         sys.error(s"graft-log versions are numbers, got VERSION AS OF '$version'")
-    }
-    val t = p.toString
-    val schema = SnapshotLog.read(SparkSession.active, t, Some(v)).schema
-    new LogStreamTable(t, schema, partitionColsOf(p), asOfVersion = Some(v))
-  }
+    }))
 
   /** SQL `TIMESTAMP AS OF <ts>` (Spark hands MICROseconds). */
-  override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
+  override def loadTable(ident: Identifier, timestampMicros: Long): Table =
+    load(ident, t => Some(SnapshotLog.versionAsOfTimestamp(t, timestampMicros / 1000L)))
+
+  /** The table pinned at `pin(path)` (None: the head). */
+  private def load(ident: Identifier, pin: String => Option[Long]): Table = {
     val p = tablePath(ident)
     if (!isTable(p)) throw new NoSuchTableException(ident)
-    val t = p.toString
-    val v = SnapshotLog.versionAsOfTimestamp(t, timestampMicros / 1000L)
-    val schema = SnapshotLog.read(SparkSession.active, t, Some(v)).schema
-    new LogStreamTable(t, schema, partitionColsOf(p), asOfVersion = Some(v))
+    val v = pin(p.toString)
+    new LogStreamTable(p.toString, SnapshotLog.schemaAt(p.toString, v), partitionColsOf(p),
+      asOfVersion = v)
   }
 
   /** Partition columns: from live entry paths when data exists (the
@@ -150,17 +141,14 @@ class LogCatalog extends TableCatalog with SupportsNamespaces
       case t => sys.error(s"graft catalog supports identity partitioning only, got $t")
     }
     Files.createDirectories(p)
-    val spark = SparkSession.active
     // user TBLPROPERTIES persist in the log (engine-added keys like
     // provider/location/owner stay out — they are not table state)
     val reserved = Set("provider", "location", "owner", "external",
       "comment", "format")
     val userProps = properties.asScala.toMap
       .filter { case (k, _) => !reserved(k) && !k.startsWith("option.") }
-    // an empty commit records the schema; the table reads as 0 rows
-    SnapshotLog.commit(spark,
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-      p.toString,
+    // an empty replace records the schema; the table reads as 0 rows
+    SnapshotLog.commitEmpty(p.toString, schema,
       props = if (userProps.nonEmpty) Some(userProps) else None)
     if (partCols.nonEmpty) {
       val m = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -190,7 +178,7 @@ class LogCatalog extends TableCatalog with SupportsNamespaces
       case a: TableChange.AddColumn =>
         require(a.fieldNames().length == 1,
           "graft catalog: nested ADD COLUMN is not supported (flat schemas)")
-        val cur = SnapshotLog.read(spark, p.toString).schema
+        val cur = SnapshotLog.schemaAt(p.toString)
         require(!cur.fieldNames.contains(a.fieldNames().head),
           s"column ${a.fieldNames().head} already exists in ${ident.name()}")
         SnapshotLog.commit(spark,
@@ -212,7 +200,7 @@ class LogCatalog extends TableCatalog with SupportsNamespaces
         // bloom-index columns must exist NOW (a typo'd column would
         // silently never index; fail the ALTER instead)
         if (s.property() == graft.core.BloomIndex.ColumnsProp) {
-          val have = SnapshotLog.read(spark, p.toString).schema.fieldNames.toSet
+          val have = SnapshotLog.schemaAt(p.toString).fieldNames.toSet
           val asked = s.value().split(",").map(_.trim).filter(_.nonEmpty)
           val missing = asked.filterNot(have)
           require(missing.isEmpty,
@@ -235,8 +223,7 @@ class LogCatalog extends TableCatalog with SupportsNamespaces
         s"graft catalog: only ADD/RENAME/DROP COLUMN and SET/UNSET " +
           s"TBLPROPERTIES alter a log-backed table; got $other")
     }
-    new LogStreamTable(p.toString,
-      SnapshotLog.read(spark, p.toString).schema, partitionColsOf(p))
+    loadTable(ident)
   }
 
   override def dropTable(ident: Identifier): Boolean = {

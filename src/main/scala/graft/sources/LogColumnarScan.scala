@@ -181,10 +181,9 @@ final class LogColumnarReader(part: LogInputPartition, schema: StructType,
 
   /** Dead in-file positions (deletion vectors); null when the entry
     * carries none. Positions are sequential-row ordinals — exactly
-    * what `batchStart + i` reproduces, since no filter is pushed into
-    * the parquet reader (manifest pruning is file-level; residual
-    * filters run above the scan), so the vectorized reader never
-    * skips rows. */
+    * what `batchStart + i` reproduces, because a deletion-vectored
+    * file opts out of the pushed parquet filter (`parquetFilter`), so
+    * the vectorized reader never skips a row group or page of it. */
   private val dead: java.util.HashSet[java.lang.Long] =
     if (part.dvDirs.isEmpty) null
     else LogColumnarReader.deadPositions(part.dvDirs, part.relPath)

@@ -120,13 +120,11 @@ class LogStreamProvider extends TableProvider with DataSourceRegister
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val table = tablePath(options)
-    val spark = SparkSession.active
-    // snapshot schema (union across evolved stages) — driver-side; a
-    // time-traveling batch read takes the ASKED version's schema
+    // a time-traveling batch read takes the ASKED version's schema
     val asOf = Option(options.get("versionAsOf")).map(_.toLong)
       .orElse(Option(options.get("timestampAsOf")).map(ts =>
         SnapshotLog.versionAsOfTimestamp(table, ts.toLong)))
-    val base = SnapshotLog.read(spark, table, asOf).schema
+    val base = SnapshotLog.schemaAt(table, asOf)
     if (!options.getBoolean("readChangeFeed", false)) base
     else {
       Seq(LogStreamSource.ChangeTypeCol, LogStreamSource.CommitVersionCol)
@@ -214,15 +212,11 @@ final class LogStreamTable(table: String, schema: StructType,
     () => new LogRowLevelOperation(table, schema, info.command())
   }
 
-  /** `TRUNCATE TABLE t` and a bare `DELETE FROM t`: a zero-row replace
-    * commit — history stays time-travelable. */
+  /** `TRUNCATE TABLE t` and a bare `DELETE FROM t`: an empty replace
+    * commit that keeps the columns — history stays time-travelable. */
   override def truncateTable(): Boolean = {
     require(asOfVersion.isEmpty, s"cannot truncate $name — it is a time-travel snapshot")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val cur = SnapshotLog.read(spark, table)
-    SnapshotLog.commit(spark,
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cur.schema),
-      table)
+    SnapshotLog.commitEmpty(table, SnapshotLog.schemaAt(table))
     true
   }
   override def name(): String = s"graft-log:$table" +

@@ -12,6 +12,10 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Every field nullable, nested ones too: how a file source reads a given schema. */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Codegen'd Bloom-filter probe: wraps Catalyst's
     * `BloomFilterMightContain` — the same expression Spark's
     * InjectRuntimeFilter rule plants — around a serialized

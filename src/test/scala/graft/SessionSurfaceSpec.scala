@@ -77,6 +77,24 @@ class SessionSurfaceSpec extends AnyFunSuite with SparkFixture {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("graft-log columns come from SnapshotLog.schemaAt, and a snapshot read is one scan") {
+    // no data read is built only for its schema, and the read helpers
+    // keep no per-schema scan union or empty-read stand-in
+    val main = srcRoot.resolve("main")
+    val logPath = Paths.get("graft", "core", "SnapshotLog.scala")
+    val probe = """\bread\([^()]*(\([^()]*\))?[^()]*\)\.schema\b""".r
+    val hits = for {
+      (p, text) <- sources if p.startsWith(main)
+      line <- text.linesIterator.toSeq if !line.trim.startsWith("*")
+      if line.contains("SnapshotLog.read(") || p.endsWith(logPath)
+      m <- probe.findFirstIn(line) ++ Seq("emptyLike").filter(line.contains)
+    } yield s"${srcRoot.relativize(p)}: $m"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    val log = sources.collectFirst { case (p, text) if p.endsWith(logPath) => text }
+      .getOrElse(fail("no src/main/scala/graft/core/SnapshotLog.scala"))
+    assert(!log.contains("groupBy(_.schema)"), "SnapshotLog groups reads by schema again")
+  }
+
   test("the factory's session carries the engine settings") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000")

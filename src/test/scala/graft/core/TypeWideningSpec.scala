@@ -76,6 +76,22 @@ class TypeWideningSpec extends AnyFunSuite with SparkFixture {
     assert(SnapshotLog.read(spark, t).schema("v").dataType.typeName == "string")
   }
 
+  test("byte/short -> float refuses at the WRITE: no parquet reader decodes it") {
+    import spark.implicits._
+    // exact in value, but the vectorized and the row-based parquet
+    // readers both refuse a narrow INT32 page read as float
+    for (narrow <- Seq("tinyint", "smallint")) {
+      val t = Files.createTempDirectory("graft_widen_float_").toString
+      SnapshotLog.commit(spark, Seq(1, 2).toDF("v").select(col("v").cast(narrow).as("v")), t)
+      val e = intercept[RuntimeException] {
+        SnapshotLog.commit(spark, Seq(2.5f).toDF("v"), t, append = true)
+      }
+      assert(e.getMessage.contains("incompatible write"), e.getMessage)
+      assert(SnapshotLog.latestVersion(t).contains(1L), "nothing committed")
+      assert(SnapshotLog.read(spark, t).count() == 2L)
+    }
+  }
+
   test("metadata aggregates stay exact across the widening") {
     val t = widenedTable()
     val before = graft.sources.LogSourceAudit.filesOpened.get()

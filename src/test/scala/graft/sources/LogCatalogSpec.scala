@@ -32,9 +32,7 @@ class LogCatalogSpec extends AnyFunSuite with SparkFixture {
     spark.sql("INSERT INTO graft.ml.docs VALUES (1, 'en', 10), (2, 'de', 20), (3, 'en', 30)")
     // the create-time sidecar carried the partitioning: inserts stage hive dirs
     val t = s"$root/ml/docs"
-    // live entries only: the CREATE commit staged a 0-row schema file
-    val entries = SnapshotLog.resolve(t, SnapshotLog.versions(t).last)
-      .entries.filter(_.rows > 0)
+    val entries = SnapshotLog.resolve(t, SnapshotLog.versions(t).last).entries
     assert(entries.nonEmpty && entries.forall(_.path.contains("lang=")),
       s"catalog-declared partitioning must reach the staged layout: ${entries.map(_.path)}")
 
@@ -43,8 +41,7 @@ class LogCatalogSpec extends AnyFunSuite with SparkFixture {
       .collect().map(_.getLong(0)).toSet
     assert(en == Set(1L, 3L))
     val opened = LogSourceAudit.filesOpened.get() - before
-    // all files EXCEPT lang=de open: the en files match, and the
-    // CREATE commit's 0-row boundless file is conservatively kept
+    // all files EXCEPT lang=de open: the en files match
     val all = SnapshotLog.resolve(t, SnapshotLog.versions(t).last).entries
     val deFiles = all.count(_.path.contains("lang=de"))
     assert(deFiles > 0 && opened == all.size - deFiles,
@@ -82,6 +79,27 @@ class LogCatalogSpec extends AnyFunSuite with SparkFixture {
       spark.sql(s"INSERT INTO graft.tt.nums VERSION AS OF $afterCtas VALUES (99)")
     }
     assert(e != null)
+  }
+
+  test("CREATE TABLE stages no data file: an empty replace declares the columns") {
+    root
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.mk")
+    spark.sql("CREATE TABLE graft.mk.t (id BIGINT, lang STRING, n INT) PARTITIONED BY (lang) " +
+      "TBLPROPERTIES ('owner.team' = 'ml')")
+    val t = s"$root/mk/t"
+    val rec = SnapshotLog.readRecord(t, 1L)
+    assert(rec.kind == "replace" && rec.adds.isEmpty, rec)
+    assert(!Files.exists(java.nio.file.Paths.get(t, "data")), "CREATE must stage no data file")
+    assert(SnapshotLog.properties(t).get("owner.team").contains("ml"))
+    val cols = Seq("id", "lang", "n")
+    assert(spark.sql("SELECT * FROM graft.mk.t").columns.toSeq == cols)
+    assert(spark.sql("DESCRIBE graft.mk.t").collect().map(_.getString(0)).take(3).toSeq == cols)
+    // the declared column order holds across the first hive insert
+    spark.sql("INSERT INTO graft.mk.t VALUES (1, 'en', 10)")
+    spark.sql("INSERT INTO graft.mk.t VALUES (2, 'de', 20)")
+    assert(spark.sql("SELECT * FROM graft.mk.t ORDER BY id").collect().map(_.toSeq).toSeq ==
+      Seq(Seq(1L, "en", 10), Seq(2L, "de", 20)))
+    spark.sql("DROP TABLE graft.mk.t")
   }
 
   test("writeTo(...).append and readStream.table work against catalog names") {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.plans.logical.CommandResult
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -110,15 +111,36 @@ class LogSqlDeleteSpec extends AnyFunSuite with SparkFixture {
   test("TRUNCATE TABLE is one zero-row replace commit; v1 still time-travels") {
     val t = freshTable()
     register(t, "sqldel_trunc")
+    def parquetFiles(): Seq[String] = Seq("_graft_log", "data").flatMap { d =>
+      val w = Files.walk(java.nio.file.Paths.get(t, d))
+      try w.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
+      finally w.close()
+    }
     try {
+      val filesBefore = parquetFiles()
       spark.sql("TRUNCATE TABLE sqldel_trunc")
       assert(SnapshotLog.versions(t).last == 2L)
       val rec = SnapshotLog.readRecord(t, 2L)
       assert(rec.kind == "replace" && rec.rows == 0L && rec.removes.isEmpty, rec)
-      assert(SnapshotLog.resolve(t, 2L).entries.map(_.rows).sum == 0L)
+      // no zero-row file: the record declares the columns instead
+      assert(rec.adds.isEmpty, rec)
+      assert(parquetFiles() == filesBefore, "TRUNCATE must stage no parquet file")
+      assert(SnapshotLog.resolve(t, 2L).entries.isEmpty)
       assert(count("sqldel_trunc") == 0L)
+      val cols = Seq("id", "payload", "par")
+      assert(spark.sql("DESCRIBE sqldel_trunc").collect().map(_.getString(0)).toSeq == cols)
+      assert(spark.sql("SELECT * FROM sqldel_trunc").columns.toSeq == cols)
+      assert(SnapshotLog.read(spark, t).columns.toSeq == cols)
       assert(SnapshotLog.read(spark, t, asOf = Some(1L)).count() == 100L,
         "pre-truncate snapshot must stay readable")
+      // appends after the truncate read the union with the declared columns
+      spark.sql("INSERT INTO sqldel_trunc VALUES (7, 'p7', 'odd')")
+      import spark.implicits._
+      SnapshotLog.commit(spark, Seq((8L, "e8")).toDF("id", "extra"), t, append = true)
+      val after = SnapshotLog.read(spark, t)
+      assert(after.columns.toSeq == cols :+ "extra")
+      assert(after.orderBy("id").collect().map(_.toSeq).toSeq ==
+        Seq(Seq(7L, "p7", "odd", null), Seq(8L, null, null, "e8")))
     } finally spark.sql("DROP TABLE sqldel_trunc")
   }
 }
